@@ -1102,82 +1102,23 @@ _IMPORT_OBJ_SUFFIX = (("-schema-view.sql", "view"),
                       ("-schema-sequence.sql", "sequence"))
 
 
-def _sql_toplevel_mask(raw: str) -> "list[bool]":
-    """Per-character mask: True where the byte sits OUTSIDE every MySQL
-    string literal ('…'/"…" with backslash escapes and '' doubling),
-    quoted identifier (`…` with `` doubling), line comment (-- / #) and
-    plain block comment (/*…*/). Executable version comments (``/*!``)
-    stay True — MySQL runs their contents, so statement boundaries
-    inside them are real. Unterminated regions mask to end-of-input
-    (never guess a boundary inside a broken literal)."""
-    mask = [True] * len(raw)
-    i, n = 0, len(raw)
-    while i < n:
-        ch = raw[i]
-        if ch in ("'", '"'):
-            j = i + 1
-            while j < n:
-                if raw[j] == "\\" and j + 1 < n:
-                    j += 2
-                elif raw[j] == ch:
-                    if j + 1 < n and raw[j + 1] == ch:
-                        j += 2  # '' doubling
-                    else:
-                        break
-                else:
-                    j += 1
-            mask[i:min(j + 1, n)] = [False] * (min(j + 1, n) - i)
-            i = j + 1
-        elif ch == "`":
-            j = i + 1
-            while j < n:
-                if raw[j] == "`":
-                    if j + 1 < n and raw[j + 1] == "`":
-                        j += 2
-                    else:
-                        break
-                else:
-                    j += 1
-            mask[i:min(j + 1, n)] = [False] * (min(j + 1, n) - i)
-            i = j + 1
-        elif ch == "#" or (
-                raw.startswith("--", i)
-                # MySQL's rule: '--' starts a comment only before
-                # whitespace or end-of-input — `a--1` is double negation
-                # (subtracting a negative), and masking it could hide a
-                # REAL statement boundary later on the same line
-                and (i + 2 >= n or raw[i + 2].isspace())):
-            j = raw.find("\n", i)
-            j = n if j < 0 else j
-            mask[i:j] = [False] * (j - i)
-            i = j
-        elif raw.startswith("/*", i) and not raw.startswith("/*!", i):
-            j = raw.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            mask[i:j] = [False] * (j - i)
-            i = j
-        else:
-            i += 1
-    return mask
-
-
 def _split_trigger_artifact(raw: str) -> "list[tuple[str, str]]":
     """A genuine ``db.table-schema-triggers.sql`` holds ALL of one
     table's triggers; split it at TOP-LEVEL CREATE TRIGGER boundaries —
     a trigger body quoting the literal string 'CREATE TRIGGER' (or
     carrying it in a comment) must not split mid-statement, so matches
-    inside quotes/comments are rejected via :func:`_sql_toplevel_mask`
-    (the reference's splitter is statement-aware the same way,
-    myloader_process_filename.c). Each piece is named by ITS trigger
+    inside quotes/comments are rejected by the shared MySQL lexer
+    (sources/sqllex.py). Each piece is named by ITS trigger
     (the restore DROP must target the trigger's name, not the table's).
     Falls back to the whole artifact under a parse-proof name when no
     CREATE TRIGGER is found."""
     import re as _re
 
-    top = _sql_toplevel_mask(raw)
-    bounds = [m.start() for m in _re.finditer(
-        r"CREATE\s+(?:DEFINER\s*=\s*\S+\s+)?TRIGGER\b", raw,
-        _re.IGNORECASE) if top[m.start()]]
+    from mydumper_spark.sources.sqllex import toplevel
+
+    bounds = [m.start() for m in toplevel(_re.compile(
+        r"CREATE\s+(?:DEFINER\s*=\s*\S+\s+)?TRIGGER\b",
+        _re.IGNORECASE), raw)]
     if not bounds:
         return [("__unparsed_triggers", raw)]
     out = []

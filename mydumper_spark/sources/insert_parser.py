@@ -27,11 +27,14 @@ exactly, and parse_tuples' was-quoted bit guarantees a quoted literal
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from mydumper_spark.sources.sqllex import toplevel
 
 #: MySQL backslash-escape map (mysql_real_escape_string inverse)
 _UNESCAPE = {
@@ -47,35 +50,16 @@ _UNESCAPE = {
 }
 
 
+_VALUES = re.compile(r"(?<!\w)VALUES(?!\w)", re.I)
+_HEAD_TOKEN = re.compile(r"[(),]|" + _VALUES.pattern, re.I)
+
+
 def _find_values_kw(s: str) -> int:
-    """Index just past the VALUES keyword, scanning outside quoted/backticked
-    regions (a table or column named `values` must not trigger)."""
-    in_bt = in_sq = False
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if in_sq:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == "'":
-                in_sq = False
-        elif in_bt:
-            if ch == "`":
-                in_bt = False
-        else:
-            if ch == "'":
-                in_sq = True
-            elif ch == "`":
-                in_bt = True
-            elif (
-                s[i : i + 6].upper() == "VALUES"
-                and (i + 6 >= n or not (s[i + 6].isalnum() or s[i + 6] == "_"))
-                and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            ):
-                return i + 6
-        i += 1
-    return -1
+    """Index just past the first top-level VALUES keyword, or -1 (a table
+    or column named `values`, or VALUES in a string or comment, does not
+    count)."""
+    m = next(toplevel(_VALUES, s), None)
+    return -1 if m is None else m.end()
 
 
 def _insert_columns(line: str) -> "list[str] | None":
@@ -86,61 +70,36 @@ def _insert_columns(line: str) -> "list[str] | None":
     ``columns_on_insert`` config, and ALWAYS for tables with generated
     columns, which are excluded from dumps and recomputed server-side
     (detect_generated_fields forcing complete_insert,
-    mydumper_table.c:478-482; mysqldump does the same). Scanning is
-    quote/backtick-aware: a backticked column named ``a(b`` must not
-    open a group, and the LAST top-level group before VALUES is the
-    list (the table name itself cannot be parenthesized)."""
-    vi = _find_values_kw(line)
-    if vi < 0:
-        return None
-    head = line[:vi - 6]
-    in_bt = in_sq = False
+    mydumper_table.c:478-482; mysqldump does the same). Parentheses,
+    commas and VALUES count only in top-level code (sqllex): a
+    backticked column named ``a(b`` or a commented-out group must not
+    open a group, and the LAST top-level group before VALUES is the list
+    (the table name itself cannot be parenthesized)."""
     depth = 0
-    start = last = None
-    i, n = 0, len(head)
-    while i < n:
-        ch = head[i]
-        if in_sq:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == "'":
-                in_sq = False
-        elif in_bt:
-            if ch == "`":
-                in_bt = False
-        elif ch == "'":
-            in_sq = True
-        elif ch == "`":
-            in_bt = True
-        elif ch == "(":
-            if depth == 0:
-                start = i
+    bounds: list[int] = []
+    last = None
+    for m in toplevel(_HEAD_TOKEN, line):
+        tok = m.group()
+        if tok == "(":
             depth += 1
-        elif ch == ")":
+            if depth == 1:
+                bounds = [m.end()]
+        elif tok == ")":
             depth -= 1
-            if depth == 0 and start is not None:
-                last = (start, i)
-        i += 1
+            if depth == 0:
+                last = bounds + [m.start()]
+        elif tok == ",":
+            if depth == 1:
+                bounds += [m.start(), m.end()]
+        else:
+            break
+    else:
+        return None  # no VALUES keyword
     if last is None:
         return None
-    inner = head[last[0] + 1:last[1]]
-    cols: list[str] = []
-    buf: list[str] = []
-    in_bt = False
-    for ch in inner:
-        if ch == "`":
-            in_bt = not in_bt
-            buf.append(ch)
-        elif ch == "," and not in_bt:
-            cols.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    cols.append("".join(buf))
     out = []
-    for c in cols:
-        c = c.strip()
+    for a, b in zip(last[::2], last[1::2]):
+        c = line[a:b].strip()
         if c.startswith("`") and c.endswith("`") and len(c) >= 2:
             c = c[1:-1].replace("``", "`")
         out.append(c)

@@ -25,6 +25,8 @@ import os
 import re
 from dataclasses import dataclass, field
 
+from mydumper_spark.sources.sqllex import COMMENT, STRING, SqlLexer
+
 #: strip MySQL version-gated comment wrappers /*!NNNNN ... */ for ROUTING
 #: decisions (the raw text is preserved in artifacts)
 _VERSION_GATE = re.compile(r"/\*!\d{5}\s?|\s?\*/\s*$")
@@ -80,50 +82,27 @@ class SplitResult:
 
 
 def _statements(lines) -> "list[tuple[str, str]]":
-    """Yield (raw_statement, first_line) pairs from a line stream,
-    honoring quote state (a ``;`` inside a string literal does not end a
-    statement) and ``DELIMITER`` switches (trigger/routine bodies contain
-    bare ``;``)."""
+    """Yield (raw_statement, first_line) pairs from a line stream. A
+    statement ends at a line that ends with the current delimiter outside
+    every literal and comment (sqllex: a ``;`` or an apostrophe inside a
+    string or comment does not end or open anything), and ``DELIMITER``
+    switches are honored (trigger/routine bodies contain bare ``;``)."""
     delim = ";"
     buf: list[str] = []
-    in_sq = in_dq = in_bt = False
+    lex = SqlLexer()
     for line in lines:
         stripped = line.strip()
         if not buf:
-            if not stripped or stripped.startswith("--") or stripped == "\n":
+            if not stripped or stripped.startswith("--"):
                 continue
             m = re.match(r"^DELIMITER\s+(\S+)", stripped, re.I)
             if m:
                 delim = m.group(1)
                 continue
         buf.append(line.rstrip("\n"))
-        # advance quote state across the line (backslash escapes honored)
-        i, n = 0, len(line)
-        while i < n:
-            ch = line[i]
-            if in_sq:
-                if ch == "\\":
-                    i += 2
-                    continue
-                if ch == "'":
-                    in_sq = False
-            elif in_dq:
-                if ch == "\\":
-                    i += 2
-                    continue
-                if ch == '"':
-                    in_dq = False
-            elif in_bt:
-                if ch == "`":
-                    in_bt = False
-            elif ch == "'":
-                in_sq = True
-            elif ch == '"':
-                in_dq = True
-            elif ch == "`":
-                in_bt = True
-            i += 1
-        if in_sq or in_dq or in_bt:
+        for _ in lex.regions(line):
+            pass
+        if lex.open:
             continue  # the statement terminator can't be on this line
         tail = line.rstrip()
         if tail.endswith(delim):
@@ -143,47 +122,18 @@ def _flatten_statement(raw: str) -> str:
     newline INSIDE a quoted value is re-escaped to ``\\n`` (the exact
     form the INSERT parser unescapes back to a real newline — value
     fidelity preserved), while newlines outside quotes are pure
-    formatting and become spaces."""
+    formatting and become spaces. A comment becomes one space: a ``--``
+    comment kept on the joined line would swallow the rest of it."""
     out: list[str] = []
-    in_sq = in_dq = in_bt = False
-    i, n = 0, len(raw)
-    while i < n:
-        ch = raw[i]
-        if in_sq or in_dq:
-            q = "'" if in_sq else '"'
-            if ch == "\\" and i + 1 < n:
-                out.append(raw[i:i + 2])
-                i += 2
-                continue
-            if ch == q:
-                in_sq = in_dq = False
-            elif ch == "\n":
-                out.append("\\n")
-                i += 1
-                continue
-            elif ch == "\r":
-                out.append("\\r")
-                i += 1
-                continue
-        elif in_bt:
-            if ch == "`":
-                in_bt = False
-            elif ch == "\n":  # newline in an identifier: pathological;
-                out.append(" ")  # space keeps the line-parse invariant
-                i += 1
-                continue
-        elif ch == "'":
-            in_sq = True
-        elif ch == '"':
-            in_dq = True
-        elif ch == "`":
-            in_bt = True
-        elif ch == "\n":
-            out.append(" ")
-            i += 1
-            continue
-        out.append(ch)
-        i += 1
+    for kind, a, b in SqlLexer().regions(raw):
+        part = raw[a:b]
+        if kind == STRING:
+            part = part.replace("\n", "\\n").replace("\r", "\\r")
+        elif kind == COMMENT:
+            part = " "
+        else:
+            part = part.replace("\n", " ")
+        out.append(part)
     return "".join(out)
 
 

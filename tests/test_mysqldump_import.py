@@ -1141,6 +1141,60 @@ def test_insert_columns_unit():
         "INSERT INTO t (a) /* 'VALUES' */ VALUES (1);") == ["a"]
 
 
+def test_split_mysqldump_comment_apostrophe_in_routine_body(tmp_path):
+    """A ``-- don't`` comment inside a routine body is a comment, not an
+    open string: routine ``p`` ends at its own delimiter, and the table
+    data and the table that follow it are still routed."""
+    from mydumper_spark.sources.insert_parser import parse_tuples
+    from mydumper_spark.sources.mysqldump_reader import split_mysqldump
+
+    src = tmp_path / "routine.sql"
+    src.write_text(
+        "USE `d`;\n"
+        "CREATE TABLE `t` (\n  `id` int NOT NULL\n) ENGINE=InnoDB;\n"
+        "DELIMITER ;;\n"
+        "CREATE PROCEDURE `p`()\n"
+        "BEGIN\n"
+        "  -- don't touch this\n"
+        "  SELECT 1;\n"
+        "END ;;\n"
+        "DELIMITER ;\n"
+        "INSERT INTO `t` VALUES (1),(2);\n"
+        "CREATE TABLE `u` (\n  `id` int NOT NULL\n) ENGINE=InnoDB;\n"
+        "INSERT INTO `u` VALUES (7);\n")
+    res = split_mysqldump(str(src), str(tmp_path / "out"))
+
+    def rows(key):
+        path = res.tables[key]["data_path"]
+        assert path is not None, key
+        with open(path) as fh:
+            return [t for line in fh for t in parse_tuples(line)]
+
+    assert rows("d.t") == [["1"], ["2"]]
+    assert rows("d.u") == [["7"]]
+    (p,) = [o for o in res.objects if o["name"] == "p"]
+    assert p["kind"] == "routine"
+    assert "don't touch this" in p["raw_sql"] and "SELECT 1;" in p["raw_sql"]
+    assert "INSERT" not in p["raw_sql"] and "`u`" not in p["raw_sql"]
+
+
+def test_parse_tuples_ignores_values_in_comment():
+    """A commented-out ``VALUES (9)`` before the real keyword is not a
+    row."""
+    from mydumper_spark.sources.insert_parser import parse_tuples
+
+    assert parse_tuples("INSERT INTO t /* VALUES (9) */ VALUES (1);") == [
+        ["1"]]
+
+
+def test_insert_columns_ignores_group_in_comment():
+    """A parenthesized group inside a comment is not the column list."""
+    from mydumper_spark.sources.insert_parser import _insert_columns
+
+    assert _insert_columns(
+        "INSERT INTO t (a, b) /* (c) */ VALUES (1,2);") == ["a", "b"]
+
+
 def test_generated_columns_import_end_to_end(spark, tmp_path):
     """Tables with GENERATED columns: the reference excludes them from
     dumps and forces complete-insert (mydumper_table.c:478-482), so the

@@ -166,6 +166,66 @@ def test_insert_parser_inverts_escaping(rows):
             assert q == isinstance(v, str)
 
 
+# -- MySQL lexer: statement and trigger splitting -----------------------------
+#
+# Each region draws its body from tokens that are legal inside it and hostile
+# outside it (terminators, the other quotes, comment markers, newlines).
+
+_HOSTILE = [";", "--", "# ", "/* */", "a", " ", "\n", "CREATE TRIGGER "]
+
+
+def _region(opener, body_tokens, closer):
+    return st.lists(st.sampled_from(body_tokens), max_size=8).map(
+        lambda toks: opener + "".join(toks) + closer)
+
+
+_sql_piece = st.one_of(
+    _region("'", _HOSTILE + ['"', "\\'", "''", "\\\\", "`"], "'"),
+    _region('"', _HOSTILE + ["'", '\\"', '""', "\\\\", "`"], '"'),
+    _region("`", [t for t in _HOSTILE if t != "\n"]
+            + ["'", '"', "``", "\\"], "`"),
+    # no "*/" can form inside: the only '*' is the opener's, never before '/'
+    _region("/*", [t.replace("/* */", "/* ") for t in _HOSTILE]
+            + ["'", '"', "`", "\\"], " */"),
+    # code: '--' before a non-space is double negation; a version comment's
+    # body is code, so a '*/' inside its literal does not close it
+    st.sampled_from(["1", "1--1", "x", ",", "/*!40101 @x := '*/;' */"]),
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(st.lists(_sql_piece, min_size=1, max_size=6),
+                min_size=1, max_size=5))
+def test_statements_split_exactly_at_toplevel_terminators(stmts):
+    """A ';' or quote inside a literal, identifier or comment, on the same
+    line or a later one, neither ends nor opens anything: every statement
+    comes back exactly as written."""
+    from mydumper_spark.sources.mysqldump_reader import _statements
+
+    want = ["SELECT " + " ".join(pieces) for pieces in stmts]
+    text = "".join(w + ";\n" for w in want)
+    assert [st_ for st_, _ in _statements(io.StringIO(text))] == want
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(
+    st.tuples(st.text(st.sampled_from("ab `;'\"#-/*"), min_size=1,
+                      max_size=12),
+              st.lists(_sql_piece, max_size=4)),
+    min_size=1, max_size=4))
+def test_split_trigger_artifact_names_every_trigger(triggers):
+    """Only a top-level CREATE TRIGGER starts a trigger, however its
+    name and body quote or comment the phrase."""
+    from mydumper_spark.engine import _split_trigger_artifact
+
+    raw = "".join(
+        f"CREATE TRIGGER `{name.replace('`', '``')}` BEFORE INSERT ON `t` "
+        f"FOR EACH ROW SET @x = {' '.join(body) or '1'};\n"
+        for name, body in triggers)
+    assert [n for n, _ in _split_trigger_artifact(raw)] == [
+        name for name, _ in triggers]
+
+
 # -- corpus chunking/packing boundary arithmetic ------------------------------
 #
 # The Spark expressions in operators/corpus.py are pure integer arithmetic
