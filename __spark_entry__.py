@@ -4226,63 +4226,13 @@ def x_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative to min-id canonicalization (a crawl usually keeps the
     cleanest copy, not the earliest). Composes three oracle-proven pieces:
     the exact-on-fixture MinHash cluster map, the integer-ppm quality
-    score, and a struct-min arbiter that is deterministic under any
-    partitioning. Oracle rebuilds the same map with a recursive closure +
-    window."""
-    from mydumper_spark.operators.dedup import connected_components, minhash_lsh_pairs
-    from mydumper_spark.operators.text import quality_score
+    score, and the packed argmin of ``dedup.keep_best``, deterministic
+    under any partitioning. Oracle rebuilds the same map with a recursive
+    closure + window."""
+    from mydumper_spark.operators.dedup import keep_best, minhash_lsh_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, jaccard_threshold=0.4)
-    comp = connected_components(pairs).withColumnRenamed("id", "doc_id")
-    qual = quality_score(docs.select("doc_id", "text")).select("doc_id", "quality")
-    clustered = (
-        docs.select("doc_id")
-        .join(comp, "doc_id", "left")
-        .select("doc_id", F.coalesce("comp", "doc_id").alias("cluster_id"))
-        .join(qual, "doc_id")
-    )
-    # min over (-quality, doc_id) == max quality with min-id tiebreak.
-    # quality sits on the exact integer grid q_e7/1e7 (quality_score), so
-    # the pair packs into ONE order-preserving DECIMAL radix key and the
-    # argmin is a plain HashAggregate instead of the corpus-wide
-    # Sort + SortAggregate that min(struct) plans (struct aggregation
-    # buffers are not mutable — r14, guide §5 hash vs. sort aggregate).
-    # Ordering replicated exactly, struct nulls-first included: NULL
-    # quality packs below every non-NULL key, then integer -quality,
-    # then doc_id; the id unpacks with pmod. Pinned equal to the
-    # struct-min form by test_keep_best_packed_argmin_matches_struct_min.
-    from pyspark.sql import types as T
-
-    _dec = T.DecimalType(38, 0)
-    _two63 = F.lit("9223372036854775808").cast(_dec)
-    _two64 = F.lit("18446744073709551616").cast(_dec)
-    # clamp into [0, 1e7] (quality_score's documented [0,1] grid): a
-    # negative _nq would fold the non-NULL key space into the NULL branch
-    # and silently elect wrong keepers; clamped, an out-of-range quality
-    # stays ordered at the boundary (ties → id) instead (r15, ADVICE)
-    _nq = F.greatest(
-        F.lit(0), F.least(
-            F.lit(10_000_000),
-            F.lit(10_000_000) - F.round(F.col("quality") * 1e7).cast("long"),
-        )
-    ).cast(_dec)
-    _id_shift = F.col("doc_id").cast(_dec) + _two63
-    _packed = F.when(F.col("quality").isNull(), _id_shift).otherwise(
-        _two64 + _nq * _two64 + _id_shift)
-    best = clustered.groupBy("cluster_id").agg(
-        F.min(_packed).alias("__bp")
-    ).select(
-        "cluster_id",
-        (F.pmod(F.col("__bp"), _two64) - _two63).cast("long")
-        .alias("keeper_id"),
-    )
-    return clustered.join(best, "cluster_id").select(
-        "doc_id",
-        "cluster_id",
-        "keeper_id",
-        (F.col("doc_id") == F.col("keeper_id")).alias("kept"),
-    )
+    return keep_best(docs, minhash_lsh_pairs(docs, jaccard_threshold=0.4))
 
 
 _KEEP_BEST_SQL = f"""

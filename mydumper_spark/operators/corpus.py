@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from mydumper_spark.operators.dedup import tokens
+from mydumper_spark.util import packed_key
 
 
 def chunk_documents(
@@ -162,7 +163,8 @@ def _mark_first_occurrence(
     """Add a boolean ``keep`` column: True iff this row is the first
     occurrence (smallest (id, pos)) of its unit value — the shared arbiter
     of the line/paragraph/block dedup ladder. ``arbiter="agg"`` computes
-    first occurrence as a ``min(struct)`` hash aggregate joined back
+    first occurrence as a hash aggregate over a packed (id, pos) key
+    (:func:`mydumper_spark.util.packed_key`), joined back
     (map-side partials; the join is AQE-skew-splittable — measured 18s vs
     26s against the window on one unit value repeated 8M times, and on a
     real cluster the window's skewed partition caps at one task);
@@ -177,91 +179,36 @@ def _mark_first_occurrence(
     produce NULL units and want them dropped must filter explicitly."""
     blank = (F.trim(F.col(unit_col)) == "") if keep_blank else F.lit(False)
     if arbiter == "agg":
-        # min(struct) has no mutable aggregation buffer, so Spark plans
-        # it as Sort + SortAggregate on BOTH sides of the exchange — a
-        # per-partition sort of every (unit, id, pos) row before the
-        # partial agg, over the whole corpus for the line/block ladder.
-        # Pack the pair into ONE order-preserving DECIMAL radix key
-        # instead: min(decimal) is a plain HashAggregate (guide §5 "hash
-        # aggregate vs. sort aggregate"; r14). Ordering is identical to
-        # the struct ordering (probed: struct min is nulls-FIRST per
-        # field): a NULL id packs below every non-NULL key, then (id,
-        # pos) lexicographically. Requires pos ∈ [0, 2^31) and non-NULL
-        # — true at every call site (posexplode / sequence indices); id
-        # may be any bigint, NULL included. The min unpacks back to the
-        # exact (d, p) pair, so the keep predicate (and its NULL
-        # propagation for NULL-id rows) is byte-identical to the
-        # min(struct) form — pinned by
+        # min over a packed (id, pos) key: a HashAggregate where
+        # min(struct) sorts every (unit, id, pos) row per partition. pos ∈
+        # [0, 2^31) at every call site (posexplode / sequence indices); id
+        # is any bigint or NULL (a non-integral id takes the struct
+        # fallback). The min decodes to the exact (d, p) pair, so keep and
+        # its NULL propagation equal the min(struct) form — pinned by
         # test_first_occurrence_packed_arbiter_matches_struct_min.
-        # Non-integral id types (the struct ordering is generic) keep the
-        # sort-agg form — every production ladder id is a bigint.
-        from pyspark.sql import types as T
-
+        key, decode = packed_key(
+            units, [(id_col, -2**63, 2**63 - 1), ("pos", 0, 2**31 - 1)])
+        first = units.groupBy(unit_col).agg(
+            F.min(key).alias("__fm"), F.count(F.lit(1)).alias("__c"))
+        fd, fp = decode(F.col("__fm"))
         # The join-back ships only DUPLICATED units (count > 1): a
         # singleton unit's winner is the row itself, so pruning `first`
         # to dup units keeps the join side proportional to the
         # boilerplate fraction instead of every distinct unit — AQE
         # broadcasts it on dup-light corpora and the units side then
         # crosses the wire ONCE (the groupBy input), not twice (r14;
-        # guide §2.3/2.4). Keep semantics are byte-identical, NULL-id
-        # singletons included: their keep stays NULL (the when() below
-        # reproduces the NULL the old equality produced), so the
-        # joined-back form and the pruned form agree row for row.
-        def _prune_join(first_all, dup_keep):
-            first_dups = first_all.where(F.col("__c") > 1)
-            joined = units.join(first_dups, unit_col, "left")
-            keep = blank | F.when(
-                F.col("__c").isNull(),
-                F.when(F.col(id_col).isNotNull(), F.lit(True)),
-            ).otherwise(dup_keep)
-            drop = [c for c in first_dups.columns if c != unit_col]
-            return joined.withColumn("keep", keep).drop(*drop)
-
-        if not isinstance(
-            units.schema[id_col].dataType,
-            (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-        ):
-            first = units.groupBy(unit_col).agg(
-                F.min(F.struct(F.col(id_col).alias("d"),
-                               F.col("pos").alias("p"))).alias("__first"),
-                F.count(F.lit(1)).alias("__c"),
-            )
-            return _prune_join(
-                first,
-                (F.col(id_col) == F.col("__first.d"))
-                & (F.col("pos") == F.col("__first.p")),
-            )
-
-        dec20, dec10 = T.DecimalType(20, 0), T.DecimalType(10, 0)
-        two63 = F.lit("9223372036854775808").cast(dec20)   # 2^63
-        two31 = F.lit("2147483648").cast(dec10)            # 2^31
-        packed = F.when(
-            F.col(id_col).isNull(), F.col("pos").cast(dec10)
-        ).otherwise(
-            two31 + (F.col(id_col).cast(dec20) + two63) * two31
-            + F.col("pos").cast(dec10)
-        )
-        first = units.groupBy(unit_col).agg(
-            F.min(packed).alias("__fm"), F.count(F.lit(1)).alias("__c")
-        )
-        t = F.col("__fm") - two31
-        p_star = F.pmod(t, two31)
-        # exact: t − p* is a multiple of 2^31, the decimal quotient is
-        # integral and well inside DECIMAL(38, 6)
-        d_star = ((t - p_star) / two31 - two63).cast("long")
-        first = first.select(
-            unit_col,
-            F.when(F.col("__fm") < two31, F.lit(None).cast("long"))
-            .otherwise(d_star).alias("__fd"),
-            F.when(F.col("__fm") < two31, F.col("__fm"))
-            .otherwise(p_star).cast("int").alias("__fp"),
-            "__c",
-        )
-        return _prune_join(
-            first,
-            (F.col(id_col) == F.col("__fd"))
-            & (F.col("pos") == F.col("__fp")),
-        )
+        # guide §2.3/2.4). NULL-id singletons keep a NULL keep: the when()
+        # below reproduces the NULL the equality gives in a joined-back
+        # form, so both agree row for row.
+        first_dups = first.where(F.col("__c") > 1).select(
+            unit_col, fd.alias("__fd"), fp.alias("__fp"), "__c")
+        keep = blank | F.when(
+            F.col("__c").isNull(),
+            F.when(F.col(id_col).isNotNull(), F.lit(True)),
+        ).otherwise((F.col(id_col) == F.col("__fd"))
+                    & (F.col("pos") == F.col("__fp")))
+        return (units.join(first_dups, unit_col, "left")
+                .withColumn("keep", keep).drop("__fd", "__fp", "__c"))
     if arbiter == "window":
         w = Window.partitionBy(unit_col).orderBy(
             F.col(id_col).asc(), F.col("pos").asc()
@@ -384,8 +331,8 @@ def dedup_lines_global(
 
     Two arbiter implementations, identical results (pytest-pinned):
 
-    - ``"agg"`` (default): first occurrence = ``min(struct(id, pos))`` hash
-      AGGREGATE per line value, joined back to mark survivors. Map-side
+    - ``"agg"`` (default): first occurrence = min of a packed (id, pos) key,
+      a hash AGGREGATE per line value, joined back to mark survivors. Map-side
       partial aggregation means only per-(task, line) partial minima cross
       the wire for the arbiter; corpus bytes cross once, for the join —
       and a join, unlike a window, is AQE-skew-splittable. Measured on one
@@ -523,7 +470,7 @@ def exact_substring_dedup(
     pre-r14 corpus-wide (id, tok_idx) sort-merge anti-join + collect_list
     regroup (two full shuffles of every token, measured ~40% of the
     operator at sf0.1). First-occurrence arbitration stays the ladder's
-    skew-splittable min(struct) aggregate.
+    skew-splittable packed-key min aggregate.
     """
     from mydumper_spark.util import ensure_min_partitions
 

@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mydumper_spark.operators.text import fingerprint
+from mydumper_spark.operators.text import fingerprint, quality_score
 from mydumper_spark.util import ensure_min_partitions  # noqa: F401 (re-export)
+from mydumper_spark.util import packed_key
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -361,34 +362,57 @@ def minhash_dedup(
     verified pairs and keep each cluster's highest-quality document (ties
     → smallest id), the rule a production crawl pipeline wants (keep the
     cleanest copy, not the earliest). Costs the O(log L) component rounds
-    on top of the pair join; the arbiter itself is a struct-min aggregate,
-    deterministic under any partitioning."""
+    on top of the pair join; the arbiter is :func:`keep_best`'s packed
+    argmin, deterministic under any partitioning."""
     pairs = minhash_lsh_pairs(df, text_col, id_col, **kw)
     if arbiter == "min_id":
         losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
         return df.join(losers, id_col, "left_anti")
     if arbiter != "quality":
         raise ValueError(f"unknown arbiter: {arbiter!r}")
-    from mydumper_spark.operators.text import quality_score
+    kept = keep_best(df, pairs, text_col, id_col).where("kept")
+    return df.join(kept.select(id_col), id_col, "left_semi")
 
+
+def keep_best(
+    df: DataFrame,
+    pairs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Quality-arbitered survivor of every near-dup cluster →
+    (id, cluster_id, keeper_id, kept).
+
+    Clusters are the connected components of the ``(id_a, id_b)`` pairs; a
+    document in no pair is its own cluster. The keeper is the min of
+    (-quality, id) over a util.packed_key: highest :func:`quality_score`,
+    ties → smallest id, NULL quality (NULL text) first as in a struct.
+    quality sits on the integer grid q_e7/1e7, so -quality packs as
+    1e7 − q_e7, clamped to [0, 1e7] so an out-of-range quality stays
+    ordered at the boundary. Pinned equal to the min(struct) form by
+    test_keep_best_packed_argmin_matches_struct_min."""
     comp = connected_components(pairs).withColumnRenamed("id", id_col)
-    qual = quality_score(
-        df.select(id_col, F.col(text_col).alias("text"))
-    ).select(id_col, "quality")
+    qual = quality_score(df.select(id_col, text_col), text_col)
+    nq = F.lit(10_000_000) - F.round(F.col("quality") * 1e7).cast("long")
     clustered = (
         df.select(id_col)
         .join(comp, id_col, "left")
-        .select(
-            F.col(id_col), F.coalesce("comp", F.col(id_col)).alias("__cluster")
-        )
-        .join(qual, id_col)
+        .select(id_col, F.coalesce("comp", id_col).alias("cluster_id"))
+        .join(qual.select(id_col, "quality"), id_col)
+        .withColumn("__nq", F.when(
+            nq.isNotNull(),
+            F.greatest(F.lit(0), F.least(F.lit(10_000_000), nq))))
     )
-    keepers = clustered.groupBy("__cluster").agg(
-        F.min(
-            F.struct((-F.col("quality")).alias("nq"), F.col(id_col).alias("id"))
-        )["id"].alias(id_col)
-    ).select(id_col)
-    return df.join(keepers, id_col, "left_semi")
+    key, decode = packed_key(
+        clustered, [("__nq", 0, 10_000_000), (id_col, -2**63, 2**63 - 1)])
+    best = clustered.groupBy("cluster_id").agg(F.min(key).alias("__bp"))
+    best = best.select("cluster_id", decode(F.col("__bp"))[1].alias("keeper_id"))
+    return clustered.join(best, "cluster_id").select(
+        id_col,
+        "cluster_id",
+        "keeper_id",
+        (F.col(id_col) == F.col("keeper_id")).alias("kept"),
+    )
 
 
 def connected_components(pairs: DataFrame, max_iters: int = 16) -> DataFrame:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mydumper_spark.util import packed_key
+
 #: ASCII punctuation — same set as Java \p{Punct} and RE2 [[:punct:]], so the
 #: Spark and DuckDB counts agree.
 PUNCT_RE = r"\p{Punct}"
@@ -695,20 +697,16 @@ def repetition_stats(
 
     # ties on count resolve by gram length; equal (count, length) grams
     # cover the same character mass, so the returned ratio is unambiguous.
-    # max(struct) has no mutable aggregation buffer (Sort + SortAggregate
-    # over every per-doc gram count), so pack the lexicographic (cnt, gl)
-    # pair into ONE bigint radix key — both fields are per-document
-    # counts/char-lengths, bounded by the JVM string length < 2^31, so
-    # cnt*2^31 + gl < 2^62 and max(bigint) is a plain HashAggregate with
-    # the identical argmax (r14; guide §5 hash vs. sort aggregate)
-    _two31 = F.lit(2147483648)
-    top2 = gram_counts(2).groupBy(id_col).agg(
-        F.max(F.col("cnt") * _two31 + F.col("gl")).alias("__top")
-    ).select(
-        id_col,
-        (F.expr("__top div 2147483648") * F.pmod(F.col("__top"), _two31)
-         ).alias("top2_chars"),
-    )
+    # max over the packed (cnt, gl) key (util.packed_key) is a plain
+    # HashAggregate where max(struct) sorts every per-doc gram count; both
+    # fields are per-document counts/char-lengths, bounded by the JVM
+    # string length < 2^31
+    grams2 = gram_counts(2)
+    key, decode = packed_key(grams2, [("cnt", 0, 2**31 - 1),
+                                      ("gl", 0, 2**31 - 1)])
+    top2 = grams2.groupBy(id_col).agg(F.max(key).alias("__top"))
+    cnt, gl = decode(F.col("__top"))
+    top2 = top2.select(id_col, (cnt * gl).alias("top2_chars"))
     dup5 = gram_counts(5).groupBy(id_col).agg(
         F.sum(
             F.when(F.col("cnt") > 1, F.col("cnt") * F.col("gl")).otherwise(0)

@@ -86,21 +86,29 @@ def _statements(lines) -> "list[tuple[str, str]]":
     statement ends at a line that ends with the current delimiter outside
     every literal and comment (sqllex: a ``;`` or an apostrophe inside a
     string or comment does not end or open anything), and ``DELIMITER``
-    switches are honored (trigger/routine bodies contain bare ``;``)."""
+    switches are honored (trigger/routine bodies contain bare ``;``).
+    Between statements, a line of only comments and whitespace is
+    dropped, so it never glues onto the next statement's head."""
     delim = ";"
     buf: list[str] = []
     lex = SqlLexer()
     for line in lines:
         stripped = line.strip()
         if not buf:
-            if not stripped or stripped.startswith("--"):
+            # no statement starts with dashes, so a `--x` rule line goes
+            # too, though MySQL would read it as code
+            if stripped.startswith("--"):
                 continue
             m = re.match(r"^DELIMITER\s+(\S+)", stripped, re.I)
             if m:
                 delim = m.group(1)
                 continue
+        regions = lex.regions(line)
+        if not buf and all(kind == COMMENT or line[a:b].isspace()
+                           for kind, a, b in regions):
+            continue
         buf.append(line.rstrip("\n"))
-        for _ in lex.regions(line):
+        for _ in regions:
             pass
         if lex.open:
             continue  # the statement terminator can't be on this line

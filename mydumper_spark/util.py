@@ -2,8 +2,73 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_DEC38 = T.DecimalType(38, 0)
+
+
+def packed_key(
+    df: DataFrame, fields: "list[tuple[str, int, int]]",
+) -> "tuple[Column, Callable[[Column], list[Column]]]":
+    """One key that orders like ``struct(fields)``, so the ``min``/``max``
+    of a tuple (an arg-min/max) is a HashAggregate, not the Sort +
+    SortAggregate that a struct's immutable aggregation buffer plans.
+
+    Each field ``(column, lo, hi)`` of ``df`` is one mixed-radix digit,
+    ``v - lo`` for a value in ``[lo, hi]`` (callers clamp what they cannot
+    bound) and -1 for NULL, which sorts first as in a struct. The key is a
+    BIGINT when the product of the field ranges, NULL included, fits under
+    2^63, else a DECIMAL(38,0). ``decode(aggregated_key)`` gives the fields
+    back as Columns of their input types. A non-integer field makes the key
+    ``struct(fields)`` instead, with the same ``decode``."""
+    names = [c for c, _, _ in fields]
+    types = [df.schema[c].dataType for c in names]
+    if not all(isinstance(t, _INTEGRAL) for t in types):
+        key = F.struct(*[F.col(c).alias(f"f{i}") for i, c in enumerate(names)])
+        return key, lambda k: [k[f"f{i}"] for i in range(len(names))]
+
+    radix = [hi - lo + 2 for _, lo, hi in fields]
+    # place[i]: the weight of digit i, the product of the radices after it
+    place = [1] * len(fields)
+    for i in range(len(fields) - 2, -1, -1):
+        place[i] = place[i + 1] * radix[i + 1]
+    span = place[0] * radix[0]
+    if span > 10 ** 38:
+        raise ValueError(f"packed key needs {span} values; DECIMAL(38,0) "
+                         "holds 10^38")
+    # every digit sum lies in (-span, span), so BIGINT needs span <= 2^63
+    key_t = T.LongType() if span <= 2 ** 63 else _DEC38
+
+    def const(n: int, t: T.DataType = key_t) -> Column:
+        return F.lit(str(n)).cast(t)
+
+    key = None
+    for (c, lo, _), r in zip(fields, radix):
+        v = F.col(c).cast(key_t)
+        digit = F.coalesce(v - const(lo) if lo else v, const(-1))
+        key = digit if key is None else key * const(r) + digit
+
+    def decode(k: Column) -> "list[Column]":
+        # shifted so a NULL digit is 0; then top-down, so every quotient is
+        # one digit (below 2^64 + 2) that the DECIMAL(38,6) result of
+        # decimal division holds exactly; an integer `div` of a
+        # DECIMAL(38,0) can silently return garbage
+        rest = k.cast(_DEC38) + const(sum(place), _DEC38)
+        slots = []
+        for p in place[:-1]:
+            below = F.pmod(rest, const(p, _DEC38))
+            slots.append((rest - below) / const(p, _DEC38))
+            rest = below
+        slots.append(rest)
+        return [F.when(s != 0, s + const(lo - 1, _DEC38)).cast(t)
+                for s, (_, lo, _), t in zip(slots, fields, types)]
+
+    return key, decode
 
 
 def ensure_min_partitions(
@@ -47,8 +112,6 @@ def ensure_min_partitions(
     HASH_MAP_TYPE for array<map>/struct-with-map too, and the checksum
     path feeds arbitrary imported schemas through here) are excluded from
     the key; a df with no hashable column falls back to round-robin."""
-    from pyspark.sql import types as T
-
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism
 

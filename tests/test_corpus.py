@@ -146,7 +146,8 @@ def test_dedup_lines_keeps_first_occurrence(spark):
 def test_dedup_lines_arbiters_identical_and_plan_shapes(spark, sf_dir):
     """The agg (skew-splittable) and window arbiters must return identical
     results on the fixture, and their plans must have the promised shapes:
-    agg has NO Window node (its arbiter is a partial-aggregatable min),
+    agg has NO Window node and no SortAggregate (its arbiter is a
+    partial-aggregatable min over a packed key),
     window has no line-side join."""
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     agg = dedup_lines_global(df, arbiter="agg")
@@ -156,7 +157,7 @@ def test_dedup_lines_arbiters_identical_and_plan_shapes(spark, sf_dir):
     assert a == w and len(a) > 0
     agg_plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in agg_plan, agg_plan
-    assert "partial_min" in agg_plan or "SortAggregate" in agg_plan or "HashAggregate" in agg_plan
+    assert "HashAggregate" in agg_plan and "SortAggregate" not in agg_plan, agg_plan
     win_plan = win._jdf.queryExecution().executedPlan().toString()
     assert "Window" in win_plan
     import pytest as _pytest

@@ -1178,6 +1178,32 @@ def test_split_mysqldump_comment_apostrophe_in_routine_body(tmp_path):
     assert "INSERT" not in p["raw_sql"] and "`u`" not in p["raw_sql"]
 
 
+def test_split_mysqldump_comment_lines_between_statements(tmp_path):
+    """A ``#`` or ``/* */`` comment line (one spanning lines included)
+    between statements is dropped, not glued onto the next statement's
+    head where the routing regexes would miss it; a ``/*!NNNNN */``
+    version comment is code and stays a statement."""
+    from mydumper_spark.sources.mysqldump_reader import split_mysqldump
+
+    src = tmp_path / "comments.sql"
+    src.write_text(
+        "# note\n"
+        "CREATE TABLE `t` (\n  `id` int NOT NULL\n) ENGINE=InnoDB;\n"
+        "INSERT INTO `t` VALUES (1);\n"
+        "/* block comment */\n"
+        "CREATE TABLE `u` (\n  `id` int NOT NULL\n) ENGINE=InnoDB;\n"
+        "  /* a block comment\n   over two lines */  # and a note\n"
+        "INSERT INTO `u` VALUES (7);\n"
+        "/*!40101 SET NAMES utf8mb4 */;\n")
+    res = split_mysqldump(str(src), str(tmp_path / "out"))
+    for key in ("t", "u"):
+        entry = res.tables[key]
+        assert entry["schema_path"] is not None, key
+        assert entry["create_sql"].startswith(f"CREATE TABLE `{key}`"), key
+        assert entry["data_path"] is not None, key
+    assert res.skipped_statements == 1  # the SET NAMES version comment
+
+
 def test_parse_tuples_ignores_values_in_comment():
     """A commented-out ``VALUES (9)`` before the real keyword is not a
     row."""

@@ -181,10 +181,13 @@ def test_minhash_dedup_quality_arbiter_keeps_best(spark):
     kw = dict(jaccard_threshold=0.5, bands=8, num_hashes=16)
     greedy = sorted(r["doc_id"] for r in
                     dd.minhash_dedup(df, **kw).collect())
-    best = sorted(r["doc_id"] for r in
-                  dd.minhash_dedup(df, arbiter="quality", **kw).collect())
+    quality = dd.minhash_dedup(df, arbiter="quality", **kw)
+    best = sorted(r["doc_id"] for r in quality.collect())
     assert greedy == [1, 3]      # min-id keeps the noisy earlier copy
     assert best == [2, 3]        # quality keeps the clean copy
+    # the arbiter is keep_best's packed argmin, not a min(struct) sort
+    plan = quality._jdf.queryExecution().executedPlan().toString()
+    assert "SortAggregate" not in plan, plan
     import pytest as _pytest
 
     with _pytest.raises(ValueError):

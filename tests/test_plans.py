@@ -269,10 +269,18 @@ def test_round6_sampling_plan_shapes(spark):
 def test_round6_dedup_agg_arbiter_no_window(spark):
     """The default (skew-splittable) dedup arbiter must keep its promised
     shape: the first-occurrence computation is an aggregate + join, with
-    no Window node anywhere in the line-dedup plan."""
+    no Window node anywhere in the line-dedup plan, and no SortAggregate
+    (the packed first-occurrence key hash-aggregates)."""
     plan = _plan(entry.queries()["x_dedup_lines_global"](spark, SF))
     assert "Window" not in plan, plan
-    assert "HashAggregate" in plan or "SortAggregate" in plan or "ObjectHashAggregate" in plan
+    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
+
+
+def test_repetition_stats_top_bigram_hash_aggregate(spark):
+    """The top-2gram argmax of x_repetition_stats is a max over a packed
+    (count, length) key: a HashAggregate, never a SortAggregate."""
+    plan = _plan(entry.queries()["x_repetition_stats"](spark, SF))
+    assert "HashAggregate" in plan and "SortAggregate" not in plan, plan
 
 
 def test_round7_quality_filters_zero_exchange(spark):

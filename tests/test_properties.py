@@ -11,7 +11,7 @@ from __future__ import annotations
 import io
 
 import duckdb
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from mydumper_spark.planner.chunks import _ranges_to_predicates
@@ -414,6 +414,60 @@ def test_substring_dedup_conservation_properties(texts):
         # subsequence check
         it = iter(orig)
         assert all(any(o == k for o in it) for k in kept)
+
+
+_I64 = st.one_of(st.none(), st.sampled_from([-2**63, 2**63 - 1, 0, 2**31 - 1]),
+                 st.integers(-2**63, 2**63 - 1))
+_I31 = st.one_of(st.none(), st.sampled_from([0, 2**31 - 1]),
+                 st.integers(0, 2**31 - 1))
+#: layout → (fields, the key type the bounds call for)
+_PACKED_LAYOUTS = {
+    "decimal": ([("a", -2**63, 2**63 - 1), ("b", 0, 2**31 - 1)],
+                "decimal(38,0)"),
+    "bigint": ([("c", -3, 3), ("b", 0, 2**31 - 1), ("c", -3, 3)], "bigint"),
+    "fallback": ([("s", 0, 0), ("a", -2**63, 2**63 - 1)], "struct"),
+}
+
+
+# one Spark job per example (~1 s), so each example carries many groups
+@settings(max_examples=5, deadline=None)
+@given(st.lists(st.tuples(st.integers(0, 7), _I64, _I31,
+                          st.one_of(st.none(), st.integers(-3, 3)),
+                          st.one_of(st.none(), st.text("ab", max_size=2))),
+                min_size=1, max_size=40))
+@example([(0, None, None, None, None), (0, -2**63, 0, -3, "a"),
+          (0, 2**63 - 1, 2**31 - 1, 3, "b"), (1, 0, 2**31 - 1, None, ""),
+          (1, None, 0, 3, None), (2, 2**31 - 1, None, -3, "ab")])
+def test_packed_key_min_max_match_struct(rows):
+    """For ANY groups of tuples, NULLs in every field and the BIGINT
+    bounds included: min and max of util.packed_key, decoded, equal
+    min(struct) and max(struct) — for a BIGINT-width key, a
+    DECIMAL(38,0)-width key, and a string field's struct fallback."""
+    from pyspark.sql import functions as F
+
+    from mydumper_spark.session import get_session
+    from mydumper_spark.util import packed_key
+
+    spark = get_session("tests", master="local[*]", shuffle_partitions=32)
+    df = spark.createDataFrame(
+        rows, "g int, a long, b int, c int, s string")
+    aggs, decoded = [], []
+    for name, (fields, key_type) in _PACKED_LAYOUTS.items():
+        key, decode = packed_key(df, fields)
+        assert df.select(key).schema[0].dataType.simpleString().startswith(
+            key_type), name
+        ref = F.struct(*[F.col(c).alias(f"r{i}")
+                         for i, (c, _, _) in enumerate(fields)])
+        for agg in (F.min, F.max):
+            col = f"{name}_{agg.__name__}"
+            aggs += [agg(key).alias(col), agg(ref).alias(col + "_ref")]
+            decoded += [F.struct(*decode(F.col(col))).alias(col),
+                        col + "_ref"]
+    for row in df.groupBy("g").agg(*aggs).select("g", *decoded).collect():
+        for col in row.asDict():
+            if col.endswith("_ref"):
+                assert tuple(row[col[:-4]]) == tuple(row[col]), (
+                    col, row[col[:-4]], row[col])
 
 
 @settings(max_examples=300, deadline=None)

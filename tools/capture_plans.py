@@ -1,6 +1,7 @@
-"""Capture .explain("formatted") for bench queries into plans/<outdir>/.
+"""Capture .explain("formatted") for registry entries into a directory.
 
-Usage: python3 tools/capture_plans.py <outdir-suffix e.g. r14> <before|after> [query ...]
+Usage: python3 tools/capture_plans.py <outdir> <before|after> [query ...]
+Writes <outdir>/<query>_<before|after>.txt, creating <outdir> if needed.
 Defaults to every entry in bench.BENCH_QUERIES when no query names are given.
 """
 
@@ -13,7 +14,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1]
+    outdir = sys.argv[1]
     phase = sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -25,7 +26,6 @@ def main() -> None:
     if not names:
         names = list(BENCH_QUERIES)
 
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(outdir, exist_ok=True)
 
     spark = get_session("capture-plans")
