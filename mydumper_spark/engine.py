@@ -20,7 +20,13 @@ from mydumper_spark.catalog import ParquetCatalog, TableFilters, TableMeta, pick
 from mydumper_spark.operators.transform import TableTransform, apply_transform
 from mydumper_spark.planner.chunks import ChunkPlan, plan_chunks
 from mydumper_spark.plans.loader_dag import LoaderDag, LoadJob, Phase, PurgeMode
-from mydumper_spark.sinks.manifest import Manifest, verify_manifest, write_manifest
+from mydumper_spark.sinks.manifest import (
+    Manifest,
+    read_dumped_table,
+    verify_manifest,
+    write_manifest,
+    write_schema_sidecar,
+)
 from mydumper_spark.sinks.writers import (
     CsvFormat,
     write_csv,
@@ -383,26 +389,6 @@ def _open_source(spark: SparkSession, source: str, cfg: DumpConfig):
     )
     mysql_like = dialect.is_mysql_like and dialect.product is not ServerProduct.UNKNOWN
     return JdbcCatalog(spark, source, props, mysql_like=mysql_like), snapshot, dialect
-
-
-def _read_written(spark: SparkSession, path: str, cfg: DumpConfig, schema):
-    """Typed read-back of a just-written table (checksum/profile input) —
-    dispatching on the dump format, with the dumped schema (never
-    inference: JSON/CSV are stringly-typed on disk)."""
-    if cfg.fmt == "sql":
-        from mydumper_spark.sinks.manifest import sql_chunk_paths
-        from mydumper_spark.sources.insert_parser import read_insert_sql
-
-        return read_insert_sql(spark, sql_chunk_paths(path), schema)
-    if cfg.fmt == "jsonl":
-        return spark.read.schema(schema).json(path)
-    if cfg.fmt == "orc":
-        return spark.read.orc(path)
-    if cfg.fmt == "csv":
-        from mydumper_spark.sinks.writers import read_csv_typed
-
-        return read_csv_typed(spark, path, schema, cfg.csv_format)
-    return spark.read.parquet(path)
 
 
 def _attach_schema_artifact(entry, artifact, out_name: str,
@@ -818,22 +804,10 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
             if cfg.fmt == "csv":
                 path = os.path.join(cfg.output_dir, f"{out_name}.dat")
                 write_csv(out, path, cfg.csv_format, cfg.max_records_per_file)
-                # schema sidecar: csv is stringly-typed on disk, so L9
-                # verification and a typed restore need the dumped schema
-                # (the dialect itself rides in the manifest config section)
-                with open(os.path.join(cfg.output_dir,
-                                       f"{out_name}.schema.json"), "w") as f:
-                    f.write(out.schema.json())
             elif cfg.fmt == "jsonl":
                 path = os.path.join(cfg.output_dir, f"{out_name}.jsonl")
                 write_jsonl(out, path, cfg.max_records_per_file,
                             cfg.csv_format.compression)
-                # schema sidecar (the reference dumps schema files too):
-                # JSON is stringly-typed, so a typed restore/verify needs
-                # the dumped schema, not inference
-                with open(os.path.join(cfg.output_dir,
-                                       f"{out_name}.schema.json"), "w") as f:
-                    f.write(out.schema.json())
             elif cfg.fmt == "orc":
                 from mydumper_spark.sinks.writers import write_orc
 
@@ -901,11 +875,17 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
                     open(chunks[0], "w").close()
                 path = chunks[0]  # manifest records chunk 0; readers
                 # discover siblings via sql_chunk_paths
-                with open(os.path.join(cfg.output_dir,
-                                       f"{out_name}.schema.json"), "w") as f:
-                    f.write(out.schema.json())
             else:
                 write_parquet(out, path, cfg.max_records_per_file)
+            sidecar = None
+            if cfg.fmt in ("csv", "jsonl", "sql"):
+                # schema sidecar (the reference dumps schema files too):
+                # these formats are stringly-typed on disk, so the typed
+                # read-back, L9 verification and restore need the dumped
+                # schema, not inference (a csv dialect rides in the
+                # manifest config section)
+                sidecar = write_schema_sidecar(cfg.output_dir, out_name,
+                                               out.schema)
             if cfg.exec_per_file:
                 if cfg.fmt == "sql":
                     from mydumper_spark.sinks.manifest import sql_chunk_paths
@@ -917,7 +897,11 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
             # read-back of the written bytes: what checksums and profiles
             # must describe (the files, not the pre-write plan). Runs for
             # EITHER flag — profile without checksum is a valid dump.
-            written = _read_written(spark, path, cfg, out.schema)
+            written = read_dumped_table(spark, {"path": path},
+                                        csv_dialect=manifest.csv_dialect)
+            if written is None:
+                raise FileNotFoundError(
+                    f"dump read-back: {path!r} is gone after the write")
             entry = build_entry(written, key, manifest.algorithm, path=path,
                                 database=db_rec, checksum=cfg.checksum)
             if pre_rows is not None and entry.rows != pre_rows:
@@ -957,9 +941,7 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
                         for dp, _, fs in os.walk(path) for f in fs)
                 elif os.path.exists(path):
                     files = [path]
-                sidecar = os.path.join(cfg.output_dir,
-                                       f"{out_name}.schema.json")
-                if os.path.exists(sidecar):
+                if sidecar is not None:
                     files.append(sidecar)
                 cfg.table_done(key, files)
             return key, entry, prof, artifact, out_name
@@ -1071,8 +1053,7 @@ def import_mysqldump(spark: SparkSession, dumpfile: str, out_dir: str,
             # on the same route as populated tables
             t["data_path"] = os.path.join(out_dir, f"{key}.00000.sql")
             open(t["data_path"], "w").close()
-        with open(os.path.join(out_dir, f"{key}.schema.json"), "w") as f:
-            f.write(df.schema.json())
+        write_schema_sidecar(out_dir, key, df.schema)
         entry = build_entry(df, key, manifest.algorithm,
                             path=t["data_path"], database=t["database"],
                             checksum=checksum)
@@ -1401,11 +1382,9 @@ def import_mydumper_dir(spark: SparkSession, src_dir: str, out_dir: str,
                                  schema=item["schema"])
         else:
             df = spark.createDataFrame([], item["schema"])
-        # sidecar named after the chunk prefix (db.table), the name
-        # every chunk-path schema lookup derives (_sidecar_schema)
-        with open(os.path.join(out, f"{item['qual']}.schema.json"),
-                  "w") as f:
-            f.write(df.schema.json())
+        # sidecar named after the chunk prefix (db.table), the name a
+        # chunk path's typed read looks up
+        write_schema_sidecar(out, item["qual"], df.schema)
         return build_entry(df, item["key"], manifest.algorithm,
                            path=item["chunk0"],
                            database=item["db"] if multi_db else None,
@@ -1507,7 +1486,15 @@ def restore(
     (/root/reference/src/myloader/myloader_restore.c, myloader.c:684-730).
     """
     from mydumper_spark.sinks.exec_sink import FilenameRegistry
-    from mydumper_spark.sinks.manifest import read_manifest
+    from mydumper_spark.sinks.manifest import (
+        _DAT_CHUNK_RE,
+        _SQL_CHUNK_RE,
+        is_sql_chunk,
+        materialized_table,
+        read_manifest,
+        read_schema_sidecar,
+        sql_chunk_paths,
+    )
     from mydumper_spark.sources.dump_reader import read_dump_table
 
     jdbc_target = target_root.startswith("jdbc:")
@@ -1703,114 +1690,59 @@ def restore(
         def read_target(t: str) -> DataFrame:
             return spark.read.parquet(target_paths[t])
 
-    def source_df(table: str, src_path: str | None) -> DataFrame:
+    def source_df(table: str) -> DataFrame:
+        entry = doc["tables"][table]
         # incremental entries hold a DELTA; restores materialize the full
         # state through the parent-manifest chain (K10/P10)
-        if doc["tables"][table].get("incremental"):
-            from mydumper_spark.sinks.manifest import materialized_table
-
+        if entry.get("incremental"):
             return materialized_table(spark, dump_root, table)
+        config = doc.get("config", {})
+        src = entry.get("path") or ""
+        filt_ext = config.get("exec_per_thread_extension")
+        if (filt_ext and src.endswith(filt_ext) and is_sql_chunk(src)
+                and os.path.exists(src)):
+            # dump was written through --exec-per-thread: pipe every chunk
+            # back through the user's decode command (myloader
+            # --exec-per-thread) into a scratch dir — the dump dir itself
+            # stays untouched — and read the decoded chunk 0 from there
+            if table not in _ept_scratch:
+                if exec_per_thread is None:
+                    raise ValueError(
+                        "dump chunks carry the --exec-per-thread "
+                        f"extension {filt_ext!r}; pass "
+                        "exec_per_thread=<decode command> (e.g. "
+                        "'lz4 -dc') to read them back")
+                import atexit
+                import shutil
+                import tempfile
+
+                from mydumper_spark.sinks.exec_sink import exec_decode_files
+
+                scratch = tempfile.mkdtemp(prefix="mydumper_ept_")
+                atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+                # pooled decode, the dump side's exec_filter_files
+                # inverse: chunks decode concurrently, not one after
+                # another; decoded[0] stays the manifest path
+                decoded = exec_decode_files(
+                    sql_chunk_paths(src), exec_per_thread, filt_ext, scratch)
+                prefix = _SQL_CHUNK_RE.sub("", os.path.basename(src))
+                schema = read_schema_sidecar(os.path.dirname(src), prefix)
+                if schema is not None:
+                    write_schema_sidecar(scratch, prefix, schema)
+                _ept_scratch[table] = decoded[0]
+            entry = dict(entry, path=_ept_scratch[table])
         # manifest path wins: weird/masqueraded names don't match the
         # table-name-derived default (FilenameRegistry mapping)
-        if src_path and src_path.endswith(".parquet") and os.path.exists(src_path):
-            return spark.read.parquet(src_path)
-        if src_path and src_path.endswith(".orc") and os.path.exists(src_path):
-            return spark.read.orc(src_path)
-        if src_path and src_path.endswith(".jsonl") and os.path.exists(src_path):
-            from pyspark.sql import types as T
-
-            sidecar = src_path[: -len(".jsonl")] + ".schema.json"
-            with open(sidecar) as f:  # typed read via the dumped schema
-                schema = T.StructType.fromJson(__import__("json").load(f))
-            return spark.read.schema(schema).json(src_path)
-        if src_path and os.path.exists(src_path):
-            from mydumper_spark.sinks.manifest import (
-                is_sql_chunk,
-                read_dumped_table,
-            )
-
-            if is_sql_chunk(src_path):
-                filt_ext = doc.get("config", {}).get(
-                    "exec_per_thread_extension")
-                if filt_ext and src_path.endswith(filt_ext):
-                    # dump was written through --exec-per-thread: pipe
-                    # every chunk back through the user's decode command
-                    # (myloader --exec-per-thread) into a scratch dir —
-                    # the dump dir itself stays untouched. Decoded ONCE
-                    # per table (_ept_scratch), removed at process exit.
-                    if exec_per_thread is None:
-                        raise ValueError(
-                            "dump chunks carry the --exec-per-thread "
-                            f"extension {filt_ext!r}; pass "
-                            "exec_per_thread=<decode command> (e.g. "
-                            "'lz4 -dc') to read them back")
-                    if table in _ept_scratch:
-                        entry2 = dict(doc["tables"][table])
-                        entry2["path"] = _ept_scratch[table]
-                        df = read_dumped_table(spark, entry2)
-                        if df is not None:
-                            return df
-                    import atexit
-                    import shutil as _shutil
-                    import tempfile
-
-                    from mydumper_spark.sinks.exec_sink import (
-                        exec_decode_files,
-                    )
-                    from mydumper_spark.sinks.manifest import (
-                        _SQL_CHUNK_RE,
-                        sql_chunk_paths,
-                    )
-
-                    scratch = tempfile.mkdtemp(prefix="mydumper_ept_")
-                    atexit.register(_shutil.rmtree, scratch,
-                                    ignore_errors=True)
-                    # pooled decode, the dump side's exec_filter_files
-                    # inverse: chunks overlap instead of serializing on
-                    # the driver; decoded[0] stays the manifest path
-                    decoded = exec_decode_files(
-                        sql_chunk_paths(src_path), exec_per_thread,
-                        filt_ext, scratch)
-                    prefix = _SQL_CHUNK_RE.sub(
-                        "", os.path.basename(src_path))
-                    side = os.path.join(os.path.dirname(src_path),
-                                        f"{prefix}.schema.json")
-                    if os.path.exists(side):
-                        _shutil.copy(side, scratch)
-                    _ept_scratch[table] = decoded[0]
-                    entry2 = dict(doc["tables"][table])
-                    entry2["path"] = decoded[0]
-                    df = read_dumped_table(spark, entry2)
-                    if df is not None:
-                        return df
-                # fmt="sql" dump (plain or -c compressed): typed read via
-                # the .schema.json sidecar + the INSERT parser (manifest
-                # path wins over name derivation — masqueraded filenames)
-                df = read_dumped_table(spark, doc["tables"][table])
-                if df is not None:
-                    return df
-        if src_path and src_path.endswith(".dat") and os.path.exists(src_path):
-            from mydumper_spark.sinks.manifest import read_dumped_table
-
-            # typed csv read: schema sidecar + the dialect the manifest
-            # recorded at dump time (falls through for pre-sidecar dumps)
-            df = read_dumped_table(
-                spark, doc["tables"][table],
-                csv_dialect=doc.get("config", {}).get("csv_dialect"))
-            if df is not None:
-                return df
+        df = read_dumped_table(spark, entry,
+                               csv_dialect=config.get("csv_dialect"))
+        if df is not None:
+            return df
         # name-derived fallback (stale absolute path / missing sidecar):
         # on-disk chunks of an imported hostile-name table keep their
         # mydumper_N placeholder while the manifest key is the REAL
         # name — derive the filename prefix from the recorded chunk
         # path (the path STRING survives a moved dump dir) before
         # falling back to the manifest key
-        src = doc["tables"][table].get("path") or ""
-        from mydumper_spark.sinks.manifest import (
-            _DAT_CHUNK_RE,
-            _SQL_CHUNK_RE,
-        )
-
         m = _SQL_CHUNK_RE.search(src) or _DAT_CHUNK_RE.search(src)
         if m:
             prefix = os.path.basename(src)[: -len(m.group(0))]
@@ -1831,10 +1763,9 @@ def restore(
             continue  # -s/--source-db: out-of-scope schema
         if t in skip_existing:
             continue  # L3 SKIP: the target already has it — untouched
-        src_path = entry.get("path")
         schema_only = entry.get("path") is None and entry["rows"] == 0
         if jdbc_target:
-            def make_schema_action(table=t, sp=src_path, skip=schema_only,
+            def make_schema_action(table=t, skip=schema_only,
                                    schema_def=entry.get("schema_def")):
                 def action():
                     from mydumper_spark.plans.ddl import create_table_ddl
@@ -1848,7 +1779,7 @@ def restore(
                             "jdbc: restore target needs ddl_executor to run "
                             "CREATE TABLE (L7 SCHEMA phase)"
                         )
-                    schema = source_df(table, sp).schema
+                    schema = source_df(table).schema
                     db, bare = entry_db_and_name(table)
                     # PK from the captured source DDL goes INLINE in the
                     # CREATE (split_create_table's "PK stays" rule);
@@ -1885,7 +1816,7 @@ def restore(
                             primary_key=pk))
                 return action
 
-            def make_data_action(table=t, sp=src_path):
+            def make_data_action(table=t):
                 def action():
                     from mydumper_spark.sinks.jdbc_sink import write_jdbc
 
@@ -1898,15 +1829,15 @@ def restore(
                     # INSERTs)
                     if purge != PurgeMode.APPEND:
                         ddl_executor(f"DELETE FROM {target_table(table)}")
-                    write_jdbc(source_df(table, sp), sink, target_table(table))
+                    write_jdbc(source_df(table), sink, target_table(table))
                 return action
         else:
-            def make_schema_action(table=t, sp=src_path):
+            def make_schema_action(table=t):
                 return lambda: None
 
-            def make_data_action(table=t, sp=src_path):
+            def make_data_action(table=t):
                 def action():
-                    source_df(table, sp).write.mode(purge.spark_mode).parquet(
+                    source_df(table).write.mode(purge.spark_mode).parquet(
                         target_paths[table]
                     )
                 return action
@@ -1944,7 +1875,7 @@ def restore(
             # prune against the DUMPED columns: indexes/constraints on
             # transform-dropped columns become skip notes, not target errors
             # (schema-only entries never reach here — the `continue` above)
-            avail = set(source_df(t, src_path).schema.names)
+            avail = set(source_df(t).schema.names)
             pruned, prune_notes = prune_descriptor(entry["schema_def"], avail)
             stmts = restore_statements(target_table(t), pruned, dialect)
             if prune_notes or stmts["skipped"]:

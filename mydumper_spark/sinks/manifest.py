@@ -295,66 +295,62 @@ def manifest_algorithm(doc: dict) -> str:
 
 def read_dumped_table(spark, entry: dict,
                       csv_dialect: dict | None = None) -> "DataFrame | None":
-    """Typed read of one manifest entry's dumped data, dispatching on the
-    recorded path's format: parquet directly; jsonl and csv through their
-    ``.schema.json`` sidecar (both are stringly-typed on disk — inference
-    would not round-trip the dumped types), csv additionally through the
-    dialect the manifest recorded at dump time (``csv_dialect``). Returns
-    None only for dumps that genuinely lack the sidecar (written before it
-    existed) — callers report "unverifiable", they don't crash."""
+    """Typed read of one manifest entry's dumped data — the one place a
+    recorded data path becomes a DataFrame (dump read-back, restore,
+    verify). Dispatches on the recorded path's format: parquet and orc
+    directly; jsonl, csv (``.dat``) and sql chunks through their schema
+    sidecar (all three are stringly-typed on disk — inference would not
+    round-trip the dumped types), csv additionally through the dialect
+    the manifest recorded at dump time (``csv_dialect``). Returns None
+    when the path is gone, when the dump genuinely lacks the sidecar
+    (written before it existed), or for --exec-per-thread chunks, which
+    need the user's decode command — callers report "unverifiable" or
+    fall back, they don't crash."""
     path = entry.get("path")
     if not path or not os.path.exists(path):
         return None
     if path.endswith(".parquet"):
         return spark.read.parquet(path)
-    if _SQL_CHUNK_RE.search(path):
-        # fmt="sql": path records chunk 0; data spans every sibling chunk
-        m = _SQL_CHUNK_RE.search(path)
+    directory, base = os.path.split(path)
+    # reference-layout chunks ({name}.NNNNN.sql|dat[.ext]) are FILES: an
+    # engine csv dump of a table whose name ends in digits (db `t`, table
+    # `00001`) is the Spark directory t.00001.dat, not chunk 1 of `t`
+    m = os.path.isfile(path) and (_SQL_CHUNK_RE.search(base)
+                                  or _DAT_CHUNK_RE.search(base))
+    if m:
         tail = m.group(0)
-        extra = tail[tail.index(".sql") + len(".sql"):]
-        if extra not in _NATIVE_SQL_EXTS:
+        kind, ext = tail[6:10], tail[10:]  # ".NNNNN" + ".sql"/".dat"
+        if ext not in _NATIVE_SQL_EXTS:
             # --exec-per-thread filtered dump: unreadable without the
-            # user's decode command — unverifiable, never garbage-parsed
+            # user's decode command — never garbage-parsed
             return None
-        schema = _sidecar_schema(path, tail)
+        schema = read_schema_sidecar(directory, base[: -len(tail)])
         if schema is None:
             return None
-        from mydumper_spark.sources.insert_parser import read_insert_sql
-
-        return read_insert_sql(spark, sql_chunk_paths(path), schema)
-    if path.endswith(".orc"):
-        return spark.read.orc(path)
-    if path.endswith(".jsonl"):
-        schema = _sidecar_schema(path, ".jsonl")
-        if schema is None:
-            return None
-        return spark.read.schema(schema).json(path)
-    if _DAT_CHUNK_RE.search(path):
-        # reference-layout chunked .dat (db.table.NNNNN.dat[.gz] — a
-        # genuine --load-data/--csv dump adopted by import_mydumper_dir):
-        # the typed read must span EVERY sibling chunk, not just the
-        # recorded chunk0 — a one-file read would silently load a
+        # the typed read spans EVERY sibling chunk, not just the
+        # recorded chunk 0 — a one-file read would silently load a
         # fraction of the table
-        m = _DAT_CHUNK_RE.search(path)
-        tail = m.group(0)
-        if tail[tail.index(".dat") + len(".dat"):] not in _NATIVE_SQL_EXTS:
-            return None
-        schema = _sidecar_schema(path, tail)
-        if schema is None:
-            return None
+        if kind == ".sql":
+            from mydumper_spark.sources.insert_parser import read_insert_sql
+
+            return read_insert_sql(spark, sql_chunk_paths(path), schema)
         from mydumper_spark.sinks.writers import read_csv_typed
 
         return read_csv_typed(spark, dat_chunk_paths(path), schema,
                               _dialect_format(csv_dialect))
-    if path.endswith(".dat"):
-        schema = _sidecar_schema(path, ".dat")
-        if schema is None:
-            return None
-        from mydumper_spark.sinks.writers import read_csv_typed
+    if path.endswith(".orc"):
+        return spark.read.orc(path)
+    name, suffix = os.path.splitext(base)
+    if suffix not in (".jsonl", ".dat"):
+        return None
+    schema = read_schema_sidecar(directory, name)
+    if schema is None:
+        return None
+    if suffix == ".jsonl":
+        return spark.read.schema(schema).json(path)
+    from mydumper_spark.sinks.writers import read_csv_typed
 
-        return read_csv_typed(spark, path, schema,
-                              _dialect_format(csv_dialect))
-    return None
+    return read_csv_typed(spark, path, schema, _dialect_format(csv_dialect))
 
 
 def _dialect_format(csv_dialect: dict | None):
@@ -365,6 +361,28 @@ def _dialect_format(csv_dialect: dict | None):
     from mydumper_spark.sinks.writers import csvformat_from_recorded_dialect
 
     return csvformat_from_recorded_dialect(csv_dialect)
+
+
+def write_schema_sidecar(directory: str, name: str, schema) -> str:
+    """Write ``schema`` (a StructType) as the typed-read sidecar of the
+    data files named ``name`` in ``directory`` — ``{name}.schema.json``
+    next to ``{name}.jsonl``/``.dat``/``.NNNNN.sql``. Returns its path."""
+    path = os.path.join(directory, f"{name}.schema.json")
+    with open(path, "w") as f:
+        f.write(schema.json())
+    return path
+
+
+def read_schema_sidecar(directory: str, name: str):
+    """The StructType :func:`write_schema_sidecar` wrote for ``name`` in
+    ``directory``, or None when the dump predates sidecars."""
+    from pyspark.sql import types as T
+
+    path = os.path.join(directory, f"{name}.schema.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return T.StructType.fromJson(json.load(f))
 
 
 #: chunk suffix of a fmt="sql" data file ({out_name}.NNNNN.sql[.ext…] —
@@ -410,18 +428,6 @@ def dat_chunk_paths(chunk0: str) -> list[str]:
     return _chunk_paths(chunk0, _DAT_CHUNK_RE, ".dat")
 
 
-def _sidecar_schema(path: str, suffix: str):
-    """The dumped StructType from a ``.schema.json`` sidecar, or None when
-    the dump predates sidecars for this format."""
-    from pyspark.sql import types as T
-
-    sidecar = path[: -len(suffix)] + ".schema.json"
-    if not os.path.exists(sidecar):
-        return None
-    with open(sidecar) as f:
-        return T.StructType.fromJson(json.load(f))
-
-
 def materialized_table(spark, dump_root: str, table: str):
     """Reconstruct one table's FULL current state from a dump that may be
     incremental: walk the parent-manifest chain to the base full dump, then
@@ -461,8 +467,8 @@ def verify_manifest(spark, root: str) -> dict[str, dict]:
     honoring the algorithm recorded at dump time. Format-aware: parquet,
     orc, jsonl AND csv dumps verify (csv through the schema sidecar + the
     manifest-recorded dialect — the reference verifies its native csv
-    format too); only dumps predating the sidecar return ok=None with a
-    reason instead of crashing on a wrong-format read.
+    format too); a data path that no longer exists, or a dump predating
+    the sidecar, returns ok=None with its reason instead of crashing.
     Returns {table: {"ok": bool|None, "expected": ..., "actual": ...}}."""
     doc = read_manifest(root)
     algo = manifest_algorithm(doc)
@@ -475,6 +481,11 @@ def verify_manifest(spark, root: str) -> dict[str, dict]:
         if entry.get("data_checksum") is None:
             results[t] = {"ok": None,
                           "reason": "dump ran without checksums"}
+            continue
+        if not os.path.exists(entry["path"]):
+            results[t] = {"ok": None,
+                          "reason": f"data path {entry['path']!r} does not "
+                                    "exist (moved or deleted)"}
             continue
         if entry.get("incremental"):
             # delta entry: checksums cover the reconstructed full state

@@ -88,14 +88,9 @@ def read_dump_table(
         if schema is None:
             # engine dumps write a schema sidecar next to the .dat — a
             # typed read beats inference (csv is stringly-typed on disk)
-            sidecar = os.path.join(root, f"{table}.schema.json")
-            if os.path.exists(sidecar):
-                import json
+            from mydumper_spark.sinks.manifest import read_schema_sidecar
 
-                from pyspark.sql import types as T
-
-                with open(sidecar) as f:
-                    schema = T.StructType.fromJson(json.load(f))
+            schema = read_schema_sidecar(root, table)
         from mydumper_spark.sinks.writers import read_csv_typed
 
         return read_csv_typed(spark, dat, schema, fmt)

@@ -23,9 +23,10 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-from mydumper_spark.sources.sqllex import COMMENT, STRING, SqlLexer
+from mydumper_spark.sources.sqllex import CODE, COMMENT, STRING, SqlLexer
 
 #: strip MySQL version-gated comment wrappers /*!NNNNN ... */ for ROUTING
 #: decisions (the raw text is preserved in artifacts)
@@ -47,11 +48,6 @@ _RE_VIEW = re.compile(
 _RE_OBJ = re.compile(
     r"^CREATE\b.*?\b(TRIGGER|PROCEDURE|FUNCTION|EVENT)\s+`?([^`\s(]+)`?",
     re.I | re.S)
-#: statements that are session plumbing, not content
-_SKIP_PREFIXES = ("SET ", "LOCK TABLES", "UNLOCK TABLES", "DROP TABLE",
-                  "DROP VIEW", "DROP DATABASE", "ALTER TABLE", "START ",
-                  "COMMIT", "BEGIN", "FLUSH ", "CHANGE MASTER",
-                  "CHANGE REPLICATION")
 
 
 def _ungate(s: str) -> str:
@@ -81,20 +77,22 @@ class SplitResult:
     flattened_inserts: int = 0
 
 
-def _statements(lines) -> "list[tuple[str, str]]":
-    """Yield (raw_statement, first_line) pairs from a line stream. A
-    statement ends at a line that ends with the current delimiter outside
-    every literal and comment (sqllex: a ``;`` or an apostrophe inside a
-    string or comment does not end or open anything), and ``DELIMITER``
-    switches are honored (trigger/routine bodies contain bare ``;``).
-    Between statements, a line of only comments and whitespace is
-    dropped, so it never glues onto the next statement's head."""
+def _statements(lines) -> "Iterator[tuple[str, str]]":
+    """Yield (statement, routing copy) pairs from a line stream. A
+    statement ends on a line whose last code (outside every literal and
+    comment: sqllex) ends with the current delimiter, so a comment may
+    follow the terminator; ``DELIMITER`` switches are honored
+    (trigger/routine bodies contain bare ``;``). Comments and whitespace
+    before a statement's first code are dropped, so they never hide its
+    head from the routing regexes. The routing copy is the statement
+    with each comment turned into one space."""
     delim = ";"
     buf: list[str] = []
+    commented = False
     lex = SqlLexer()
     for line in lines:
-        stripped = line.strip()
-        if not buf:
+        if not buf and lex.open is None:
+            stripped = line.strip()
             # no statement starts with dashes, so a `--x` rule line goes
             # too, though MySQL would read it as code
             if stripped.startswith("--"):
@@ -103,24 +101,35 @@ def _statements(lines) -> "list[tuple[str, str]]":
             if m:
                 delim = m.group(1)
                 continue
-        regions = lex.regions(line)
-        if not buf and all(kind == COMMENT or line[a:b].isspace()
-                           for kind, a, b in regions):
-            continue
-        buf.append(line.rstrip("\n"))
-        for _ in regions:
-            pass
-        if lex.open:
-            continue  # the statement terminator can't be on this line
-        tail = line.rstrip()
-        if tail.endswith(delim):
-            stmt = "\n".join(buf)
-            # drop the trailing delimiter (either ; or a custom one)
-            stmt = stmt.rstrip()[: -len(delim)].rstrip()
-            yield stmt, buf[0]
-            buf = []
+        start = 0 if buf else None
+        last, end = None, 0
+        for kind, a, b in lex.regions(line):
+            if kind == COMMENT:
+                # one before the statement's first code is not in it
+                commented |= start is not None
+            elif kind != CODE or not line[a:b].isspace():
+                if start is None:
+                    start = a
+                last, end = kind, b
+        if start is None:
+            continue  # only comments and whitespace before a statement
+        head = line[:end].rstrip()
+        if last == CODE and head.endswith(delim):
+            buf.append(head[start: len(head) - len(delim)])
+            stmt = "\n".join(buf).strip()
+            yield stmt, _without_comments(stmt) if commented else stmt
+            buf, commented = [], False
+        else:
+            buf.append(line[start:].rstrip("\n"))
     if buf:  # unterminated trailing statement — surface, don't swallow
-        yield "\n".join(buf), buf[0]
+        stmt = "\n".join(buf).strip()
+        yield stmt, _without_comments(stmt) if commented else stmt
+
+
+def _without_comments(sql: str) -> str:
+    """``sql`` with each comment turned into one space."""
+    return "".join(" " if kind == COMMENT else sql[a:b]
+                   for kind, a, b in SqlLexer().regions(sql))
 
 
 def _flatten_statement(raw: str) -> str:
@@ -196,20 +205,24 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
     try:
         with open(path, encoding="utf-8",
                   errors="surrogateescape") as fh:
-            for raw, first_line in _statements(fh):
-                gated = raw.lstrip().startswith("/*!")
-                # routing copy: strip every gate opener AND residual
-                # closer (`CREATE DATABASE /*!32312 IF NOT EXISTS*/ …`
-                # leaves a mid-statement ``*/``); data INSERTs are written
-                # from ``raw``, so a ``*/`` inside a value is untouched
+            for raw, code in _statements(fh):
+                gated = code.startswith("/*!")
+                # strip every gate opener AND residual closer (`CREATE
+                # DATABASE /*!32312 IF NOT EXISTS*/ …` leaves a
+                # mid-statement ``*/``): ``s`` is the replayable artifact
+                # text, ``route`` the comment-free copy the regexes match
+                # (`CREATE /* x */ TABLE`); data INSERTs are written from
+                # ``raw``, so a ``*/`` inside a value is untouched
                 s = _ungate(_VERSION_GATE.sub("", raw)).strip()
-                m = _RE_USE.match(s)
+                route = (s if code is raw
+                         else _ungate(_VERSION_GATE.sub("", code)).strip())
+                m = _RE_USE.match(route)
                 if m:
                     current_db = m.group(1)
                     if current_db not in res.databases:
                         res.databases.append(current_db)
                     continue
-                m = _RE_CREATE_DB.match(s)
+                m = _RE_CREATE_DB.match(route)
                 if m:
                     db = m.group(1)
                     if db not in res.databases:
@@ -220,7 +233,7 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
                               errors="surrogateescape") as f:
                         f.write(s + ";\n")  # gate-free, replayable form
                     continue
-                m = _RE_INSERT.match(s)
+                m = _RE_INSERT.match(route)
                 if m:
                     key, db, bare = key_for(m.group(1))
                     entry = res.tables.setdefault(
@@ -246,7 +259,7 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
                         raw = _flatten_statement(raw)
                     _handle(key, entry["data_path"]).write(raw + ";\n")
                     continue
-                m = _RE_CREATE_TABLE.match(s)
+                m = _RE_CREATE_TABLE.match(route)
                 if m:
                     if gated:
                         # /*!50001 CREATE TABLE — a view stand-in, not a
@@ -266,7 +279,7 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
                               errors="surrogateescape") as f:
                         f.write(entry["create_sql"] + "\n")
                     continue
-                mv = _RE_VIEW.match(s)
+                mv = _RE_VIEW.match(route)
                 if mv:
                     key, db, bare = key_for(mv.group(1))
                     # the real view supersedes any /*!50001 stand-in table
@@ -276,7 +289,7 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
                                         "raw_sql": _ungate(s) + ";",
                                         "table": None})
                     continue
-                mo = _RE_OBJ.match(s)
+                mo = _RE_OBJ.match(route)
                 if mo:
                     kind_raw, name = mo.group(1).upper(), mo.group(2)
                     kind = {"TRIGGER": "trigger", "PROCEDURE": "routine",
@@ -287,10 +300,8 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
                                         "raw_sql": _ungate(s) + ";",
                                         "table": None})
                     continue
-                up = s.upper()
-                if not s or up.startswith(_SKIP_PREFIXES) or gated:
-                    res.skipped_statements += 1
-                    continue
+                # session plumbing (SET, LOCK TABLES, DROP TABLE, …) and
+                # anything else unrouted
                 res.skipped_statements += 1
     finally:
         for f in data_fh.values():

@@ -1204,6 +1204,43 @@ def test_split_mysqldump_comment_lines_between_statements(tmp_path):
     assert res.skipped_statements == 1  # the SET NAMES version comment
 
 
+def test_split_mysqldump_comment_after_terminator(tmp_path):
+    """A comment after a statement's ``;`` on the same line still ends
+    the statement: t's INSERT is t's data, not part of t's schema, and u
+    keeps its own CREATE TABLE."""
+    from mydumper_spark.sources.mysqldump_reader import split_mysqldump
+
+    src = tmp_path / "trailing.sql"
+    src.write_text(
+        "CREATE TABLE t (id int); -- schema\n"
+        "INSERT INTO t VALUES (1); -- one row\n"
+        "CREATE TABLE u (id int);\n"
+        "INSERT INTO u VALUES (2);\n")
+    res = split_mysqldump(str(src), str(tmp_path / "out"))
+    for key, row in (("t", "(1)"), ("u", "(2)")):
+        entry = res.tables[key]
+        assert entry["create_sql"] == f"CREATE TABLE {key} (id int);", key
+        with open(entry["data_path"]) as f:
+            assert f.read() == f"INSERT INTO {key} VALUES {row};\n", key
+    assert res.skipped_statements == 0
+
+
+def test_split_mysqldump_comment_before_statement_head(tmp_path):
+    """A comment on the same line before a statement's head does not
+    hide the statement from routing."""
+    from mydumper_spark.sources.mysqldump_reader import split_mysqldump
+
+    src = tmp_path / "head.sql"
+    src.write_text("/* x */ CREATE TABLE t (id int);\n"
+                   "/* y */ INSERT INTO t VALUES (1);\n")
+    res = split_mysqldump(str(src), str(tmp_path / "out"))
+    entry = res.tables["t"]
+    assert entry["schema_path"] is not None
+    assert entry["create_sql"] == "CREATE TABLE t (id int);"
+    assert entry["data_path"] is not None
+    assert res.skipped_statements == 0
+
+
 def test_parse_tuples_ignores_values_in_comment():
     """A commented-out ``VALUES (9)`` before the real keyword is not a
     row."""

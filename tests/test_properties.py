@@ -193,17 +193,29 @@ _sql_piece = st.one_of(
 )
 
 
+#: comments around a statement: before its head, on its own line(s) or
+#: the head's, and after its terminator on the terminator's line
+_HEAD_COMMENT = st.sampled_from(
+    ["", "/* ; ' */ ", "/*a*/", "/* a\n ; */ ", "# x;\n", "-- ' ;\n"])
+_TAIL_COMMENT = st.sampled_from(
+    ["", " -- ;'", " # x;", "/* ; */", " /* ' */ -- ;", " /* a\n ; */"])
+
+
 @settings(max_examples=150, deadline=None)
-@given(st.lists(st.lists(_sql_piece, min_size=1, max_size=6),
+@given(st.lists(st.tuples(_HEAD_COMMENT,
+                          st.lists(_sql_piece, min_size=1, max_size=6),
+                          _TAIL_COMMENT),
                 min_size=1, max_size=5))
 def test_statements_split_exactly_at_toplevel_terminators(stmts):
     """A ';' or quote inside a literal, identifier or comment, on the same
-    line or a later one, neither ends nor opens anything: every statement
-    comes back exactly as written."""
+    line or a later one, neither ends nor opens anything, and comments
+    before a statement's head or after its terminator are not part of
+    it: every statement comes back exactly as written."""
     from mydumper_spark.sources.mysqldump_reader import _statements
 
-    want = ["SELECT " + " ".join(pieces) for pieces in stmts]
-    text = "".join(w + ";\n" for w in want)
+    want = ["SELECT " + " ".join(pieces) for _, pieces, _ in stmts]
+    text = "".join(head + w + ";" + tail + "\n"
+                   for (head, _, tail), w in zip(stmts, want))
     assert [st_ for st_, _ in _statements(io.StringIO(text))] == want
 
 

@@ -1040,6 +1040,15 @@ def test_verify_manifest_csv_verifies(spark, sf_dir, tmp_path):
     assert res3["nation"]["ok"] is None
     assert "re-read" in res3["nation"]["reason"]
 
+    # data path gone (moved or deleted): ok=None with its own reason
+    import shutil
+
+    shutil.rmtree(os.path.join(out, "nation.dat"))
+    res4 = verify_manifest(spark, out)
+    assert res4["nation"]["ok"] is None
+    assert "does not exist" in res4["nation"]["reason"]
+    assert "re-read" not in res4["nation"]["reason"]
+
 
 def test_dump_profile_without_checksum(spark, sf_dir, tmp_path):
     """ADVICE r6: `--profile --no-checksum` must still write _profile.json
@@ -1953,12 +1962,12 @@ def test_check_row_count_and_disk_limits(spark, sf_dir, tmp_path, monkeypatch):
         filters=TableFilters(tables_list={"default.region"})))
 
     # mismatch path: make the written read-back disagree with the pre-count
-    real = eng._read_written
+    real = eng.read_dumped_table
 
-    def tampered(spark_, path, cfg, schema):
-        return real(spark_, path, cfg, schema).limit(3)
+    def tampered(spark_, entry, csv_dialect=None):
+        return real(spark_, entry, csv_dialect=csv_dialect).limit(3)
 
-    monkeypatch.setattr(eng, "_read_written", tampered)
+    monkeypatch.setattr(eng, "read_dumped_table", tampered)
     with pytest.raises(RuntimeError, match="row count mismatch"):
         dump(spark, sf_dir, DumpConfig(
             output_dir=str(tmp_path / "crc2"), check_row_count=True,
@@ -3118,6 +3127,28 @@ def test_csv_legacy_manifest_reads_raw_form(spark, tmp_path):
         "fields_escaped_by": "\\", "lines_terminated_by": "\n",
         "header": False, "null_value": "\\N", "compression": None})
     assert back.collect()[0]["s"] == "a\\\\b"
+
+
+def test_read_dumped_table_engine_dat_named_like_a_chunk(spark, tmp_path):
+    """An engine csv dump of table `00001` in database `t` is the Spark
+    directory t.00001.dat, not chunk 1 of a reference-layout table `t`:
+    its typed read returns only its own rows, never those of the sibling
+    table dumped as t.00002.dat."""
+    import dataclasses
+
+    from mydumper_spark.sinks.manifest import read_dumped_table
+    from mydumper_spark.sinks.writers import CsvFormat, write_csv
+
+    fmt = CsvFormat()
+    for name, ids in (("t.00001", [1, 2]), ("t.00002", [3])):
+        df = spark.createDataFrame([(i, f"r{i}") for i in ids],
+                                   "id int, s string")
+        write_csv(df, str(tmp_path / f"{name}.dat"), fmt)
+        (tmp_path / f"{name}.schema.json").write_text(df.schema.json())
+    back = read_dumped_table(spark, {"path": str(tmp_path / "t.00001.dat")},
+                             csv_dialect=dataclasses.asdict(fmt))
+    assert back is not None
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "r1"), (2, "r2")]
 
 
 def test_incremental_chain_randomized_mutations(spark, tmp_path):
