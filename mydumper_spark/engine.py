@@ -12,6 +12,7 @@ data → index/constraint/post phases) → checksum verification (L9).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -351,20 +352,24 @@ def _build_throttle_gate(cfg: DumpConfig) -> "_ThrottleGate | None":
     return _ThrottleGate(probe, value, max_sleep)
 
 
+@contextmanager
 def _open_source(spark: SparkSession, source: str, cfg: DumpConfig):
     """Route the dump source: a directory → ParquetCatalog; a ``jdbc:`` URL
     → live dialect probe → S11 snapshot fence (MySQL-family only) →
-    JdbcCatalog over the same connection properties. Returns
-    (catalog, DumpFence|None). The fence runs before any chunk
-    planning/scan and records the GTID position; because Spark's
-    per-partition scan connections open later (their REPEATABLE-READ
-    snapshot comes from sessionInitStatement), the table-wide guarantee is
-    completed by ``fence.verify_after()`` at dump end — GTID unchanged
-    across the window ⇒ all partition snapshots observed identical data
-    (/root/reference/src/mydumper/mydumper_start_dump.c:1389-1417).
-    Returns (catalog, DumpFence|None, ServerDialect|None)."""
+    JdbcCatalog over the same connection properties. Yields
+    (catalog, DumpFence|None, ServerDialect|None) and releases the fence
+    on exit: a failure must not leak its open REPEATABLE-READ transaction
+    (it pins the source's undo/history horizon). The fence runs before
+    any chunk planning/scan and records the GTID position; because
+    Spark's per-partition scan connections open later (their
+    REPEATABLE-READ snapshot comes from sessionInitStatement), the
+    table-wide guarantee is completed by ``fence.verify_after()`` at dump
+    end — GTID unchanged across the window ⇒ all partition snapshots
+    observed identical data
+    (reference mydumper_start_dump.c:1389-1417)."""
     if not source.startswith("jdbc:"):
-        return ParquetCatalog(spark, source), None, None
+        yield ParquetCatalog(spark, source), None, None
+        return
     from mydumper_spark.catalog import JdbcCatalog
     from mydumper_spark.sources.jdbc_source import (
         JdbcSourceConfig,
@@ -384,19 +389,55 @@ def _open_source(spark: SparkSession, source: str, cfg: DumpConfig):
     )
     props = jcfg.properties()
     dialect = cfg.dialect or detect_via_jdbc(spark, source, props)
-    snapshot = snapshot_fence_for_dump(
+    fence = snapshot_fence_for_dump(
         dialect, cfg.connection_factory, num_workers=cfg.fence_workers
     )
     mysql_like = dialect.is_mysql_like and dialect.product is not ServerProduct.UNKNOWN
-    return JdbcCatalog(spark, source, props, mysql_like=mysql_like), snapshot, dialect
+    try:
+        yield (JdbcCatalog(spark, source, props, mysql_like=mysql_like),
+               fence, dialect)
+    finally:
+        if fence is not None:
+            fence.release()
+
+
+def _plan_tables(cat, cfg: DumpConfig) -> list[tuple]:
+    """The admitted tables in catalog order as ``[(key, db_rec, meta,
+    tt)]`` — the one discovery rule of ``dump``, ``dump_incremental`` and
+    ``source_drift``. ``key`` is the manifest key, ``db_rec`` the database
+    recorded in the entry (None in single-namespace dumps), ``tt`` the
+    table's TableTransform or None."""
+    from mydumper_spark.catalog import JdbcCatalog
+
+    metas = cat.discover(cfg.filters, **(
+        {"include_views": True}
+        if cfg.views_as_tables and isinstance(cat, JdbcCatalog)
+        else {}))
+    # a multi-database JDBC server can hold same-named tables in
+    # different schemas — bare names would collide on both the manifest
+    # key and the output filename, silently overwriting one table with
+    # another
+    multi_db = len({m.database for m in metas}) > 1
+    plan = []
+    for meta in metas:
+        key = meta.qualified_name if multi_db else meta.name
+        # per-table config: the manifest key first; a single-namespace
+        # dump also honors the qualified form. A multi-database dump
+        # matches the qualified key only (a bare name there would apply
+        # one schema's WHERE/scope to a stranger table of the same name)
+        tt = cfg.per_table.get(key)
+        if tt is None and not multi_db:
+            tt = cfg.per_table.get(meta.qualified_name)
+        plan.append((key, meta.database if multi_db else None, meta, tt))
+    return plan
 
 
 def _attach_schema_artifact(entry, artifact, out_name: str,
                             output_dir: str) -> None:
     """Write a captured table-DDL artifact next to the data file and point
-    the manifest entry at it — the phase-3 merge step shared by ``dump``
-    and ``dump_incremental`` (an incremental restore needs the same
-    L6/L7 inputs a full restore gets)."""
+    the manifest entry at it — the phase-3 merge step of ``_run_dump``
+    and the imports (an incremental restore needs the same L6/L7 inputs a
+    full restore gets)."""
     if artifact is None:
         return
     import hashlib as _hashlib
@@ -422,9 +463,9 @@ def _capture_objects(cat, dialect, cfg: DumpConfig,
                      admitted_tables: set[str], multi_db: bool,
                      capture_conn) -> list:
     """Non-table schema objects (views/triggers/routines/events/sequences),
-    captured once per dump and filter-gated — shared by ``dump`` and
-    ``dump_incremental`` (reference -schema-view.sql / -schema-triggers.sql
-    / db-schema-post.sql artifacts, mydumper_jobs.c:392-620). Returns
+    captured once per dump and filter-gated by ``_run_dump`` (reference
+    -schema-view.sql / -schema-triggers.sql / db-schema-post.sql
+    artifacts, mydumper_jobs.c:392-620). Returns
     ``[(key, obj), ...]``; empty for non-JDBC sources."""
     from mydumper_spark.catalog import JdbcCatalog
 
@@ -538,8 +579,8 @@ def _write_object_artifacts(manifest: Manifest, schema_objects: list,
                             fnames, output_dir: str,
                             view_dep_engine: str = "MEMORY") -> None:
     """Write each captured schema object's DDL artifact and record it in
-    ``manifest.objects`` (phase-3 merge step, shared by ``dump`` and
-    ``dump_incremental``).
+    ``manifest.objects`` (phase-3 merge step of ``_run_dump`` and the
+    imports).
 
     For views with captured columns, also write the reference's stand-in
     dependency table (``{view}-schema.sql`` holding ``CREATE TABLE IF NOT
@@ -593,24 +634,228 @@ def _write_object_artifacts(manifest: Manifest, schema_objects: list,
         })
 
 
+def _run_dump(spark: SparkSession, source: str, cfg: DumpConfig,
+              manifest: Manifest, job: str, write_table,
+              plan_table, plan_top: dict | None = None):
+    """The one dump driver behind ``dump`` and ``dump_incremental`` — the
+    reference's single ``start_dump`` orchestration
+    (mydumper_start_dump.c:1039-1560), in three phases:
+
+    1. (sequential) open the source and record its consistency position,
+       name every admitted table's outputs, capture table DDL and schema
+       objects; under --dry-run return the plan here;
+    2. (pooled) per table: the --disk-limits/--throttle gates, the
+       source read, the P11 schema-only entry or the entry point's
+       ``write_table(key, db_rec, meta, df, out_name) -> (entry,
+       profile|None)`` over the transformed frame;
+    3. (sequential) merge in catalog order — manifest and profile content
+       are byte-identical to a dump_threads=1 run — then the fence's
+       full-window check and the manifest write.
+
+    Planning stays sequential so output names and the manifest are
+    deterministic regardless of thread interleaving; the capture
+    connection is used only there, so it needs no locking. Tables run
+    concurrently from a driver thread pool (``dump_threads``) — the
+    reference's worker-thread-per-table model (mydumper_working_thread.c).
+    ``plan_table(key, tt)`` and ``plan_top`` add the entry point's own
+    --dry-run fields."""
+    import json as _json
+
+    from mydumper_spark.catalog import JdbcCatalog
+    from mydumper_spark.sinks.exec_sink import (
+        FilenameRegistry,
+        masquerade_table_name,
+    )
+    from mydumper_spark.sinks.manifest import build_entry
+
+    manifest.compact = cfg.compact
+    manifest.use_savepoints = cfg.use_savepoints
+    with _open_source(spark, source, cfg) as (cat, fence, dialect):
+        if fence is not None:
+            # reference [source] section: the binlog/GTID position the
+            # dump is consistent at (mydumper_start_dump.c:774-808)
+            manifest.source_info["executed_gtid_set"] = fence.gtid
+            manifest.source_info["fence_attempts"] = str(fence.attempts)
+        if cfg.tidb_snapshot is not None:
+            # TiDB: the pinned MVCC timestamp IS the consistency record — a
+            # consumer must see WHICH snapshot the dump reads as-of.
+            # Recorded unconditionally, next to any fence record: a
+            # mysql-scheme URL with a connection_factory builds a fence AND
+            # may pin a snapshot
+            manifest.source_info["tidb_snapshot"] = cfg.tidb_snapshot
+        capture = cfg.capture_ddl and isinstance(cat, JdbcCatalog)
+        capture_conn = None
+        try:
+            # --- phase 1 (sequential): plan work items + capture source
+            # DDL (driver-plane catalog metadata: a few tiny queries per
+            # table, optionally one shared SHOW CREATE TABLE connection)
+            fnames = FilenameRegistry()
+            plan = _plan_tables(cat, cfg)
+            # db_rec is set exactly when the dump spans several databases
+            multi_db = any(db_rec is not None for _, db_rec, _, _ in plan)
+            os.makedirs(cfg.output_dir, exist_ok=True)
+            if capture:
+                from mydumper_spark.sources.ddl_capture import (
+                    capture_table_ddl,
+                )
+                from mydumper_spark.sources.server_detect import ServerProduct
+
+                product = dialect.product if dialect else ServerProduct.UNKNOWN
+                if cfg.connection_factory is not None:
+                    try:
+                        capture_conn = cfg.connection_factory()
+                    except Exception:
+                        pass  # DDL is composed from the catalog instead
+            work = []
+            for key, db_rec, meta, tt in plan:
+                out_name = (
+                    masquerade_table_name(key)
+                    if cfg.masquerade_filenames
+                    # weird-name safety (specific_16); multi-db dumps keep
+                    # the reference's db.table composition (segments
+                    # sanitized independently) so fmt="sql" chunk files
+                    # route through myloader's filename parser
+                    else fnames.filename_for_qualified(meta.database,
+                                                       meta.name)
+                    if multi_db
+                    else fnames.filename_for(key)
+                )
+                artifact = None
+                # a view-as-table restores from the dumped column schema;
+                # SHOW CREATE would yield view DDL, wrong to replay as a
+                # table
+                if capture and not meta.is_view:
+                    artifact = capture_table_ddl(
+                        lambda sql: cat._q(sql).collect(), product,
+                        meta.database, meta.name, conn=capture_conn,
+                    )
+                work.append((key, db_rec, meta, tt, out_name, artifact))
+
+            # non-table schema objects (views/triggers/routines/events) —
+            # captured once per dump, filter-gated, replayed by restore in
+            # the POST phase
+            schema_objects = _capture_objects(
+                cat, dialect, cfg, {item[0] for item in work}, multi_db,
+                capture_conn)
+
+            if cfg.dry_run:
+                # --dry-run: the plan, never the execution. Phase 1 only
+                # touched source METADATA (catalog discovery, DDL
+                # capture); object artifacts are written in phase 3, so
+                # returning here writes nothing and reads no data.
+                return {
+                    "dry_run": True,
+                    "format": cfg.fmt,
+                    "output_dir": cfg.output_dir,
+                    **(plan_top or {}),
+                    "tables": {
+                        key: {
+                            "database": db_rec,
+                            "output_name": out_name,
+                            "row_estimate": meta.row_estimate,
+                            **plan_table(key, tt),
+                        }
+                        for key, db_rec, meta, tt, out_name, _ in work
+                    },
+                    "objects": [
+                        {"kind": obj.kind, "database": obj.database,
+                         "name": obj.name}
+                        for _, obj in schema_objects
+                    ],
+                }
+
+            # --- phase 2 (pooled): each table is an independent chain of
+            # Spark jobs; pool threads overlap them (FAIR pool "dump" so
+            # no one table's stage monopolizes slots under fair
+            # scheduling).
+            disk_limits = (_parse_disk_limits(cfg.disk_limits)
+                           if cfg.disk_limits else None)
+            throttle_gate = _build_throttle_gate(cfg)
+
+            def run_table(item):
+                key, db_rec, meta, tt, out_name, _ = item
+                sc = spark.sparkContext
+                sc.setLocalProperty("spark.scheduler.pool", "dump")
+                sc.setLocalProperty("spark.job.description", f"{job} {key}")
+                if disk_limits is not None:  # --disk-limits: stall, don't fail
+                    _wait_for_disk(cfg, *disk_limits)
+                if throttle_gate is not None:  # --throttle: hold while loaded
+                    throttle_gate.wait()
+                df = cat.read(meta, cfg.chunks_per_table)
+                if tt is not None and "DATA" not in tt.object_scope:  # P11
+                    return build_entry(df.limit(0), key, manifest.algorithm,
+                                       path=None, database=db_rec), None
+                return write_table(
+                    key, db_rec, meta,
+                    apply_transform(df, tt, global_where=cfg.global_where),
+                    out_name)
+
+            n_threads = max(1, int(cfg.dump_threads))
+            if n_threads > 1 and len(work) > 1:
+                from concurrent.futures import ThreadPoolExecutor
+
+                with ThreadPoolExecutor(max_workers=n_threads) as ex:
+                    results = list(ex.map(run_table, work))
+            else:
+                results = [run_table(item) for item in work]
+
+            # --- phase 3 (sequential): merge in catalog order
+            profiles: dict[str, list] = {}
+            for (key, _, _, _, out_name, artifact), (entry, prof) in zip(
+                    work, results):
+                _attach_schema_artifact(entry, artifact, out_name,
+                                        cfg.output_dir)
+                manifest.tables[key] = entry
+                if prof is not None:
+                    profiles[key] = prof
+            _write_object_artifacts(
+                manifest, schema_objects, fnames, cfg.output_dir,
+                view_dep_engine=cfg.table_engine_for_view_dependency)
+            if cfg.profile and profiles:
+                with open(os.path.join(cfg.output_dir, "_profile.json"),
+                          "w") as f:
+                    _json.dump(profiles, f, indent=1)
+            if fence is not None:
+                # full-window GTID verification: still the fenced position
+                # ⇒ no write committed while ANY partition was scanning ⇒
+                # all per-partition snapshots observed identical data.
+                # Recorded either way — a consumer must be able to see
+                # when the fence was only point-in-time (reference
+                # --no-locks degraded mode).
+                stable = fence.verify_after()
+                manifest.source_info["consistency"] = (
+                    "gtid-stable" if stable else "writes-during-dump"
+                )
+                if not stable:
+                    import warnings
+
+                    warnings.warn(
+                        "gtid_executed advanced during the dump: "
+                        "per-partition snapshots may be mutually "
+                        "inconsistent (recorded as "
+                        "consistency=writes-during-dump in the manifest)",
+                        stacklevel=3,
+                    )
+        finally:
+            if capture_conn is not None and hasattr(capture_conn, "close"):
+                try:
+                    capture_conn.close()
+                except Exception:
+                    pass
+    manifest.finish()
+    write_manifest(manifest, cfg.output_dir)
+    return manifest
+
+
 def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
     """Full export: every admitted table, transformed, chunk-planned,
     written, manifest-ed. Chunk plans are computed but the write itself uses
     Spark's native partitioning — the plan is recorded in the manifest for
     restore-side parallelism and for JDBC sources, where it becomes real
-    read partitions.
-
-    Tables run concurrently from a driver thread pool (``dump_threads``) —
-    the reference's worker-thread-per-table model (mydumper_working_thread.c);
-    planning (discovery, name assignment, DDL capture) stays sequential so
-    output names and the manifest are deterministic regardless of thread
-    interleaving."""
-    from mydumper_spark.catalog import JdbcCatalog
-    from mydumper_spark.sinks.exec_sink import (
-        FilenameRegistry,
-        exec_per_file,
-        masquerade_table_name,
-    )
+    read partitions. Each table's step (pooled by ``_run_dump``): write in
+    ``cfg.fmt``, read the written bytes back, checksum, profile, run the
+    --exec filters, announce through ``table_done``."""
+    from mydumper_spark.sinks.exec_sink import exec_per_file
     from mydumper_spark.sinks.manifest import build_entry
 
     if bool(cfg.exec_per_thread) != bool(cfg.exec_per_thread_extension):
@@ -639,370 +884,179 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
                 "--exec-per-thread-extension must be dot-separated "
                 "alphanumeric segments, each 1-10 chars (e.g. .lz4, "
                 f".enc.v2); got {cfg.exec_per_thread_extension!r}")
-    cat, fence, dialect = _open_source(spark, source_dir, cfg)
     manifest = Manifest(fmt=cfg.fmt)
     if cfg.exec_per_thread:
         manifest.exec_per_thread_extension = cfg.exec_per_thread_extension
-    manifest.compact = cfg.compact
-    manifest.use_savepoints = cfg.use_savepoints
     if cfg.fmt == "csv":
         from dataclasses import asdict as _asdict
 
         # record the write dialect so verify/restore can re-read the files
         # exactly as written (CsvFormat round-trips through this dict)
         manifest.csv_dialect = _asdict(cfg.csv_format)
-    if fence is not None:
-        # reference [source] section: the binlog/GTID position the dump is
-        # consistent at (mydumper_start_dump.c:774-808)
-        manifest.source_info = {
-            "executed_gtid_set": fence.gtid,
-            "fence_attempts": str(fence.attempts),
-        }
-    if cfg.tidb_snapshot is not None:
-        # TiDB: the pinned MVCC timestamp IS the consistency record — a
-        # consumer must see WHICH snapshot the dump reads as-of. Recorded
-        # unconditionally (merged with any fence record, not an either/or:
-        # a mysql-scheme URL with a connection_factory builds a fence AND
-        # may pin a snapshot — dropping the TSO the partitions actually
-        # read as-of would orphan the consistency claim)
-        manifest.source_info = {
-            **(manifest.source_info or {}),
-            "tidb_snapshot": cfg.tidb_snapshot,
-        }
-    capture_conn = None
-    try:
-        fnames = FilenameRegistry()
-        profiles: dict[str, list] = {}
-        metas = cat.discover(cfg.filters, **(
-            {"include_views": True}
-            if cfg.views_as_tables and isinstance(cat, JdbcCatalog)
-            else {}))
-        # a multi-database JDBC server can hold same-named tables in
-        # different schemas — bare names would collide on both the manifest
-        # key and the output filename, silently overwriting one table with
-        # another
-        multi_db = len({m.database for m in metas}) > 1
 
-        # --- phase 1 (sequential): plan work items + capture source DDL.
-        # Capture is driver-plane catalog metadata (a few tiny queries per
-        # table, optionally one shared SHOW CREATE TABLE connection) — kept
-        # out of the pool so the connection needs no locking.
-        os.makedirs(cfg.output_dir, exist_ok=True)
-        if (cfg.capture_ddl and isinstance(cat, JdbcCatalog)
-                and cfg.connection_factory is not None):
-            try:
-                capture_conn = cfg.connection_factory()
-            except Exception:
-                capture_conn = None
-        work = []
-        for meta in metas:
-            key = meta.qualified_name if multi_db else meta.name
-            db_rec = meta.database if multi_db else None
-            # per-table config: exact qualified key always wins; the
-            # bare-name form is honored only in single-namespace dumps
-            # (matching it across schemas would apply one schema's
-            # WHERE/scope to a stranger table of the same name)
-            tt = cfg.per_table.get(key)
-            if tt is None and not multi_db:
-                tt = cfg.per_table.get(meta.qualified_name)
-            out_name = (
-                masquerade_table_name(key)
-                if cfg.masquerade_filenames
-                # weird-name safety (specific_16); multi-db dumps keep the
-                # reference's db.table composition (segments sanitized
-                # independently) so fmt="sql" chunk files route through
-                # myloader's filename parser
-                else fnames.filename_for_qualified(meta.database, meta.name)
-                if multi_db
-                else fnames.filename_for(key)
+    def write_table(key, db_rec, meta, out, out_name):
+        pre_rows = None
+        if cfg.check_row_count:
+            # an INDEPENDENT pre-count (its own scan/pushed COUNT(*)):
+            # written rows differing from it means writes slipped into
+            # an unfenced dump window (reference m_critical,
+            # mydumper_start_dump.c:804)
+            from mydumper_spark.planner.chunks import estimate_rows
+
+            pre_rows = estimate_rows(out)
+        if (cfg.order_by_primary and meta.primary_key
+                and all(c in out.columns for c in meta.primary_key)):
+            out = out.sortWithinPartitions(*meta.primary_key)
+        path = os.path.join(cfg.output_dir, f"{out_name}.parquet")
+        if cfg.fmt == "csv":
+            path = os.path.join(cfg.output_dir, f"{out_name}.dat")
+            write_csv(out, path, cfg.csv_format, cfg.max_records_per_file)
+        elif cfg.fmt == "jsonl":
+            path = os.path.join(cfg.output_dir, f"{out_name}.jsonl")
+            write_jsonl(out, path, cfg.max_records_per_file,
+                        cfg.csv_format.compression)
+        elif cfg.fmt == "orc":
+            from mydumper_spark.sinks.writers import write_orc
+
+            path = os.path.join(cfg.output_dir, f"{out_name}.orc")
+            write_orc(out, path, cfg.max_records_per_file)
+        elif cfg.fmt == "sql":
+            # K1, the reference's NATIVE format: multi-row INSERT chunk
+            # files named {db.}table.NNNNN.sql in the dump root — the
+            # exact layout myloader routes by filename
+            # (myloader_process_filename.c), so a JDBC-source dump is
+            # directly loadable by real myloader. Statements assemble
+            # shuffle-free and order-preserving (-k survives);
+            # statement_size caps bytes exactly (reference -s).
+            import shutil
+
+            from mydumper_spark.sinks.writers import (
+                insert_statements_stream,
             )
-            artifact = None
-            # a view-as-table restores from the dumped column schema; SHOW
-            # CREATE would yield view DDL, wrong to replay as a table
-            if (cfg.capture_ddl and isinstance(cat, JdbcCatalog)
-                    and not meta.is_view):
-                from mydumper_spark.sources.ddl_capture import capture_table_ddl
-                from mydumper_spark.sources.server_detect import ServerProduct
 
-                product = dialect.product if dialect else ServerProduct.UNKNOWN
-                artifact = capture_table_ddl(
-                    lambda sql: cat._q(sql).collect(), product,
-                    meta.database, meta.name, conn=capture_conn,
-                )
-            work.append((key, db_rec, meta, tt, out_name, artifact))
-
-        # non-table schema objects (views/triggers/routines/events) —
-        # captured once per dump, filter-gated, replayed by restore in the
-        # POST phase
-        schema_objects = _capture_objects(
-            cat, dialect, cfg, {item[0] for item in work}, multi_db,
-            capture_conn)
-
-        if cfg.dry_run:
-            # --dry-run: the plan, never the execution. Phase 1 above only
-            # touched source METADATA (catalog discovery, DDL capture);
-            # object artifacts are written in phase 3, so returning here
-            # writes nothing and reads no data.
-            return {
-                "dry_run": True,
-                "format": cfg.fmt,
-                "output_dir": cfg.output_dir,
-                "tables": {
-                    key: {
-                        "database": db_rec,
-                        "output_name": out_name,
-                        "row_estimate": meta.row_estimate,
-                        "schema_only": bool(
-                            tt is not None
-                            and "DATA" not in tt.object_scope),
-                    }
-                    for key, db_rec, meta, tt, out_name, artifact in work
-                },
-                "objects": [
-                    {"kind": obj.kind, "database": obj.database,
-                     "name": obj.name}
-                    for _, obj in schema_objects
-                ],
-            }
-
-        # --- phase 2 (pooled): per-table read → transform → write →
-        # checksum/profile. Each item is an independent chain of Spark
-        # jobs; pool threads overlap them (FAIR pool "dump" so no one
-        # table's stage monopolizes slots under fair scheduling).
-        disk_limits = (_parse_disk_limits(cfg.disk_limits)
-                       if cfg.disk_limits else None)
-        throttle_gate = _build_throttle_gate(cfg)
-
-        def run_table(item):
-            key, db_rec, meta, tt, out_name, artifact = item
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", "dump")
-            spark.sparkContext.setLocalProperty(
-                "spark.job.description", f"dump {key}")
-            if disk_limits is not None:  # --disk-limits: stall, don't fail
-                _wait_for_disk(cfg, *disk_limits)
-            if throttle_gate is not None:  # --throttle: hold while loaded
-                throttle_gate.wait()
-            df = cat.read(meta, cfg.chunks_per_table)
-            if tt is not None and "DATA" not in tt.object_scope:  # P11
-                entry = build_entry(df.limit(0), key, manifest.algorithm,
-                                    path=None, database=db_rec)
-                return key, entry, None, artifact, out_name
-            out = apply_transform(df, tt, global_where=cfg.global_where)
-            pre_rows = None
-            if cfg.check_row_count:
-                # an INDEPENDENT pre-count (its own scan/pushed COUNT(*)):
-                # written rows differing from it means writes slipped into
-                # an unfenced dump window (reference m_critical,
-                # mydumper_start_dump.c:804)
-                from mydumper_spark.planner.chunks import estimate_rows
-
-                pre_rows = estimate_rows(out)
-            if (cfg.order_by_primary and meta.primary_key
-                    and all(c in out.columns for c in meta.primary_key)):
-                out = out.sortWithinPartitions(*meta.primary_key)
-            path = os.path.join(cfg.output_dir, f"{out_name}.parquet")
-            if cfg.fmt == "csv":
-                path = os.path.join(cfg.output_dir, f"{out_name}.dat")
-                write_csv(out, path, cfg.csv_format, cfg.max_records_per_file)
-            elif cfg.fmt == "jsonl":
-                path = os.path.join(cfg.output_dir, f"{out_name}.jsonl")
-                write_jsonl(out, path, cfg.max_records_per_file,
-                            cfg.csv_format.compression)
-            elif cfg.fmt == "orc":
-                from mydumper_spark.sinks.writers import write_orc
-
-                path = os.path.join(cfg.output_dir, f"{out_name}.orc")
-                write_orc(out, path, cfg.max_records_per_file)
-            elif cfg.fmt == "sql":
-                # K1, the reference's NATIVE format: multi-row INSERT chunk
-                # files named {db.}table.NNNNN.sql in the dump root — the
-                # exact layout myloader routes by filename
-                # (myloader_process_filename.c), so a JDBC-source dump is
-                # directly loadable by real myloader. Statements assemble
-                # shuffle-free and order-preserving (-k survives);
-                # statement_size caps bytes exactly (reference -s).
-                import shutil
-
-                from mydumper_spark.sinks.writers import (
-                    insert_statements_stream,
-                )
-
-                complex_cols = [
-                    f"{c}:{t}" for c, t in out.dtypes
-                    if t.startswith(("array", "map", "struct"))
-                ]
-                if complex_cols:
-                    raise ValueError(
-                        "fmt='sql' renders relational rows (the reference "
-                        "targets MySQL); nested columns cannot round-trip "
-                        f"as SQL literals: {complex_cols}. Dump this table "
-                        "as parquet, or project the nested columns away.")
-                stmts = insert_statements_stream(
-                    out, meta.name, cfg.rows_per_statement,
-                    cfg.complete_insert, cfg.insert_mode,
-                    cfg.statement_size,
-                )
-                tmp = os.path.join(cfg.output_dir, f"_{out_name}.sqltmp")
-                w = stmts.write.mode("overwrite")
-                comp = cfg.csv_format.compression  # -c: .sql.gz/.sql.zst
-                ext = {"gzip": ".gz", "zstd": ".zst"}.get(comp or "", "")
-                if comp:
-                    w = w.option("compression", comp)
-                if cfg.max_records_per_file:
-                    # file rotation in ROWS → statements (the writer's
-                    # record unit); with a byte cap active this is an
-                    # upper bound, not exact — same trade the reference
-                    # makes between --rows and --chunk-filesize
-                    per_file = max(1, -(-int(cfg.max_records_per_file)
-                                        // max(1, cfg.rows_per_statement)))
-                    w = w.option("maxRecordsPerFile", per_file)
-                w.text(tmp)
-                parts = sorted(
-                    f for f in os.listdir(tmp)
-                    if f.startswith("part-") and not f.endswith(".crc"))
-                chunks = []
-                for i, p in enumerate(parts):
-                    dst = os.path.join(cfg.output_dir,
-                                       f"{out_name}.{i:05d}.sql{ext}")
-                    os.replace(os.path.join(tmp, p), dst)
-                    chunks.append(dst)
-                shutil.rmtree(tmp)
-                if not chunks:
-                    # empty table still records a data path — always a
-                    # PLAIN .sql (a zero-byte .gz is not a valid stream)
-                    chunks = [os.path.join(cfg.output_dir,
-                                           f"{out_name}.00000.sql")]
-                    open(chunks[0], "w").close()
-                path = chunks[0]  # manifest records chunk 0; readers
-                # discover siblings via sql_chunk_paths
-            else:
-                write_parquet(out, path, cfg.max_records_per_file)
-            sidecar = None
-            if cfg.fmt in ("csv", "jsonl", "sql"):
-                # schema sidecar (the reference dumps schema files too):
-                # these formats are stringly-typed on disk, so the typed
-                # read-back, L9 verification and restore need the dumped
-                # schema, not inference (a csv dialect rides in the
-                # manifest config section)
-                sidecar = write_schema_sidecar(cfg.output_dir, out_name,
-                                               out.schema)
-            if cfg.exec_per_file:
-                if cfg.fmt == "sql":
-                    from mydumper_spark.sinks.manifest import sql_chunk_paths
-
-                    for p in sql_chunk_paths(path):  # reference: per FILE
-                        exec_per_file(p, cfg.exec_per_file)
-                else:
-                    exec_per_file(path, cfg.exec_per_file)
-            # read-back of the written bytes: what checksums and profiles
-            # must describe (the files, not the pre-write plan). Runs for
-            # EITHER flag — profile without checksum is a valid dump.
-            written = read_dumped_table(spark, {"path": path},
-                                        csv_dialect=manifest.csv_dialect)
-            if written is None:
-                raise FileNotFoundError(
-                    f"dump read-back: {path!r} is gone after the write")
-            entry = build_entry(written, key, manifest.algorithm, path=path,
-                                database=db_rec, checksum=cfg.checksum)
-            if pre_rows is not None and entry.rows != pre_rows:
-                raise RuntimeError(
-                    f"check-row-count: row count mismatch for {key}: "
-                    f"dumped {entry.rows} of {pre_rows} expected")
-            prof = None
-            if cfg.profile:
-                from mydumper_spark.operators.profile import table_profile
-
-                prof = [r.asDict() for r in table_profile(written).collect()]
-            if cfg.exec_per_thread:
-                # AFTER every consumer of the plain files (checksum +
-                # profile jobs both read `written` lazily): pipe each
-                # chunk through the filter on a worker pool (the reference
-                # filters per writer thread), record chunk0's filtered name
-                from mydumper_spark.sinks.exec_sink import exec_filter_files
+            complex_cols = [
+                f"{c}:{t}" for c, t in out.dtypes
+                if t.startswith(("array", "map", "struct"))
+            ]
+            if complex_cols:
+                raise ValueError(
+                    "fmt='sql' renders relational rows (the reference "
+                    "targets MySQL); nested columns cannot round-trip "
+                    f"as SQL literals: {complex_cols}. Dump this table "
+                    "as parquet, or project the nested columns away.")
+            stmts = insert_statements_stream(
+                out, meta.name, cfg.rows_per_statement,
+                cfg.complete_insert, cfg.insert_mode,
+                cfg.statement_size,
+            )
+            tmp = os.path.join(cfg.output_dir, f"_{out_name}.sqltmp")
+            w = stmts.write.mode("overwrite")
+            comp = cfg.csv_format.compression  # -c: .sql.gz/.sql.zst
+            ext = {"gzip": ".gz", "zstd": ".zst"}.get(comp or "", "")
+            if comp:
+                w = w.option("compression", comp)
+            if cfg.max_records_per_file:
+                # file rotation in ROWS → statements (the writer's
+                # record unit); with a byte cap active this is an
+                # upper bound, not exact — same trade the reference
+                # makes between --rows and --chunk-filesize
+                per_file = max(1, -(-int(cfg.max_records_per_file)
+                                    // max(1, cfg.rows_per_statement)))
+                w = w.option("maxRecordsPerFile", per_file)
+            w.text(tmp)
+            parts = sorted(
+                f for f in os.listdir(tmp)
+                if f.startswith("part-") and not f.endswith(".crc"))
+            chunks = []
+            for i, p in enumerate(parts):
+                dst = os.path.join(cfg.output_dir,
+                                   f"{out_name}.{i:05d}.sql{ext}")
+                os.replace(os.path.join(tmp, p), dst)
+                chunks.append(dst)
+            shutil.rmtree(tmp)
+            if not chunks:
+                # empty table still records a data path — always a
+                # PLAIN .sql (a zero-byte .gz is not a valid stream)
+                chunks = [os.path.join(cfg.output_dir,
+                                       f"{out_name}.00000.sql")]
+                open(chunks[0], "w").close()
+            path = chunks[0]  # manifest records chunk 0; readers
+            # discover siblings via sql_chunk_paths
+        else:
+            write_parquet(out, path, cfg.max_records_per_file)
+        sidecar = None
+        if cfg.fmt in ("csv", "jsonl", "sql"):
+            # schema sidecar (the reference dumps schema files too):
+            # these formats are stringly-typed on disk, so the typed
+            # read-back, L9 verification and restore need the dumped
+            # schema, not inference (a csv dialect rides in the
+            # manifest config section)
+            sidecar = write_schema_sidecar(cfg.output_dir, out_name,
+                                           out.schema)
+        if cfg.exec_per_file:
+            if cfg.fmt == "sql":
                 from mydumper_spark.sinks.manifest import sql_chunk_paths
 
-                filtered = exec_filter_files(
-                    sql_chunk_paths(path), cfg.exec_per_thread,
-                    cfg.exec_per_thread_extension)
-                path = filtered[0]
-                entry.path = path
-            if cfg.table_done is not None:
-                # this table is DONE (written + checksummed + profiled):
-                # announce its files — data (file or directory of parts)
-                # plus the typed-read sidecar where the format has one
-                files = []
-                if cfg.fmt == "sql":
-                    from mydumper_spark.sinks.manifest import sql_chunk_paths
+                for p in sql_chunk_paths(path):  # reference: per FILE
+                    exec_per_file(p, cfg.exec_per_file)
+            else:
+                exec_per_file(path, cfg.exec_per_file)
+        # read-back of the written bytes: what checksums and profiles
+        # must describe (the files, not the pre-write plan). Runs for
+        # EITHER flag — profile without checksum is a valid dump.
+        written = read_dumped_table(spark, {"path": path},
+                                    csv_dialect=manifest.csv_dialect)
+        if written is None:
+            raise FileNotFoundError(
+                f"dump read-back: {path!r} is gone after the write")
+        entry = build_entry(written, key, manifest.algorithm, path=path,
+                            database=db_rec, checksum=cfg.checksum)
+        if pre_rows is not None and entry.rows != pre_rows:
+            raise RuntimeError(
+                f"check-row-count: row count mismatch for {key}: "
+                f"dumped {entry.rows} of {pre_rows} expected")
+        prof = None
+        if cfg.profile:
+            from mydumper_spark.operators.profile import table_profile
 
-                    files = sql_chunk_paths(path)  # every sibling chunk
-                elif os.path.isdir(path):
-                    files = sorted(
-                        os.path.join(dp, f)
-                        for dp, _, fs in os.walk(path) for f in fs)
-                elif os.path.exists(path):
-                    files = [path]
-                if sidecar is not None:
-                    files.append(sidecar)
-                cfg.table_done(key, files)
-            return key, entry, prof, artifact, out_name
+            prof = [r.asDict() for r in table_profile(written).collect()]
+        if cfg.exec_per_thread:
+            # AFTER every consumer of the plain files (checksum +
+            # profile jobs both read `written` lazily): pipe each
+            # chunk through the filter on a worker pool (the reference
+            # filters per writer thread), record chunk0's filtered name
+            from mydumper_spark.sinks.exec_sink import exec_filter_files
+            from mydumper_spark.sinks.manifest import sql_chunk_paths
 
-        n_threads = max(1, int(cfg.dump_threads))
-        if n_threads > 1 and len(work) > 1:
-            from concurrent.futures import ThreadPoolExecutor
+            filtered = exec_filter_files(
+                sql_chunk_paths(path), cfg.exec_per_thread,
+                cfg.exec_per_thread_extension)
+            path = filtered[0]
+            entry.path = path
+        if cfg.table_done is not None:
+            # this table is DONE (written + checksummed + profiled):
+            # announce its files — data (file or directory of parts)
+            # plus the typed-read sidecar where the format has one
+            files = []
+            if cfg.fmt == "sql":
+                from mydumper_spark.sinks.manifest import sql_chunk_paths
 
-            with ThreadPoolExecutor(max_workers=n_threads) as ex:
-                results = list(ex.map(run_table, work))
-        else:
-            results = [run_table(item) for item in work]
+                files = sql_chunk_paths(path)  # every sibling chunk
+            elif os.path.isdir(path):
+                files = sorted(
+                    os.path.join(dp, f)
+                    for dp, _, fs in os.walk(path) for f in fs)
+            elif os.path.exists(path):
+                files = [path]
+            if sidecar is not None:
+                files.append(sidecar)
+            cfg.table_done(key, files)
+        return entry, prof
 
-        # --- phase 3 (sequential): merge in catalog order — manifest and
-        # profile content are byte-identical to a dump_threads=1 run.
-        import json as _json
-
-        for key, entry, prof, artifact, out_name in results:
-            _attach_schema_artifact(entry, artifact, out_name,
-                                    cfg.output_dir)
-            manifest.tables[key] = entry
-            if prof is not None:
-                profiles[key] = prof
-        _write_object_artifacts(
-            manifest, schema_objects, fnames, cfg.output_dir,
-            view_dep_engine=cfg.table_engine_for_view_dependency)
-        if cfg.profile and profiles:
-            with open(os.path.join(cfg.output_dir, "_profile.json"), "w") as f:
-                _json.dump(profiles, f, indent=1)
-        if fence is not None:
-            # full-window GTID verification: still the fenced position ⇒ no
-            # write committed while ANY partition was scanning ⇒ all per-
-            # partition snapshots observed identical data. Recorded either
-            # way — a consumer must be able to see when the fence was only
-            # point-in-time (reference --no-locks degraded mode).
-            stable = fence.verify_after()
-            manifest.source_info["consistency"] = (
-                "gtid-stable" if stable else "writes-during-dump"
-            )
-            if not stable:
-                import warnings
-
-                warnings.warn(
-                    "gtid_executed advanced during the dump: per-partition "
-                    "snapshots may be mutually inconsistent (recorded as "
-                    "consistency=writes-during-dump in the manifest)",
-                    stacklevel=2,
-                )
-    finally:
-        # a mid-dump failure must not leak the fence's open REPEATABLE-READ
-        # transaction (it pins the source's undo/history horizon)
-        if fence is not None:
-            fence.release()
-        if capture_conn is not None and hasattr(capture_conn, "close"):
-            try:
-                capture_conn.close()
-            except Exception:
-                pass
-    manifest.finish()
-    write_manifest(manifest, cfg.output_dir)
-    return manifest
+    return _run_dump(
+        spark, source_dir, cfg, manifest, "dump", write_table,
+        lambda key, tt: {"schema_only": bool(
+            tt is not None and "DATA" not in tt.object_scope)})
 
 
 def import_mysqldump(spark: SparkSession, dumpfile: str, out_dir: str,
@@ -1742,10 +1796,14 @@ def restore(
         # mydumper_N placeholder while the manifest key is the REAL
         # name — derive the filename prefix from the recorded chunk
         # path (the path STRING survives a moved dump dir) before
-        # falling back to the manifest key
-        m = _SQL_CHUNK_RE.search(src) or _DAT_CHUNK_RE.search(src)
+        # falling back to the manifest key. Chunks are FILES
+        # (read_dumped_table's rule): an engine csv dump of table
+        # t.00001 is the directory t.00001.dat, not chunk 1 of t
+        base = os.path.basename(src)
+        m = (os.path.isfile(os.path.join(dump_root, base))
+             and (_SQL_CHUNK_RE.search(base) or _DAT_CHUNK_RE.search(base)))
         if m:
-            prefix = os.path.basename(src)[: -len(m.group(0))]
+            prefix = base[: -len(m.group(0))]
             if prefix and prefix != table:
                 return read_dump_table(spark, dump_root, prefix)
         return read_dump_table(spark, dump_root, table)
@@ -2179,21 +2237,15 @@ def dump_incremental(
     manifest. Tables without a PK (or new tables) fall back to a full
     re-dump, recorded as mode=full. Incremental dumps are parquet-only.
 
-    Same three-phase split as ``dump``: planning + DDL capture sequential
-    (deterministic names/manifest), per-table diff/write/checksum jobs
-    pooled across ``dump_threads`` (at 1000 tables a sequential driver
-    loop pays Σ(latency) with the cluster idle — each table is 3 small
-    jobs), merge in catalog order (manifest byte-identical to threads=1).
-    Source DDL and schema objects are captured exactly as in ``dump`` so
-    an incremental restore replays the same SCHEMA/INDEX/CONSTRAINT/POST
-    phases a full restore gets."""
+    Everything else is ``dump``'s driver (``_run_dump``): the same table
+    plan, output names, consistency record, source DDL and schema objects
+    (an incremental restore replays the same SCHEMA/INDEX/CONSTRAINT/POST
+    phases a full restore gets), and the same pooled per-table phase."""
     import hashlib as _hashlib
 
     from pyspark.sql import functions as F
 
-    from mydumper_spark.catalog import JdbcCatalog
     from mydumper_spark.operators.diff import snapshot_diff
-    from mydumper_spark.sinks.exec_sink import FilenameRegistry
     from mydumper_spark.sinks.manifest import (
         build_entry,
         materialized_table,
@@ -2207,187 +2259,69 @@ def dump_incremental(
         raise ValueError(
             "incremental dumps are parquet-only; --exec-per-thread "
             "filters fmt='sql' chunk files")
-    cat, fence, dialect = _open_source(spark, source_dir, cfg)
     manifest = Manifest(fmt="parquet")
-    manifest.compact = cfg.compact
-    manifest.use_savepoints = cfg.use_savepoints
     manifest.parent_manifest = os.path.abspath(parent_dir)
-    capture_conn = None
-    try:
-        os.makedirs(cfg.output_dir, exist_ok=True)
-        fnames = FilenameRegistry()
-        metas = cat.discover(cfg.filters, **(
-            {"include_views": True}
-            if cfg.views_as_tables and isinstance(cat, JdbcCatalog)
-            else {}))
-        multi_db = len({m.database for m in metas}) > 1
-
-        # --- phase 1 (sequential): plan work items + capture source DDL
-        if (cfg.capture_ddl and isinstance(cat, JdbcCatalog)
-                and cfg.connection_factory is not None):
-            try:
-                capture_conn = cfg.connection_factory()
-            except Exception:
-                capture_conn = None
-        work = []
-        for meta in metas:
-            key = meta.qualified_name if multi_db else meta.name
-            db_rec = meta.database if multi_db else None
-            tt = cfg.per_table.get(key)
-            if tt is None and not multi_db:
-                tt = cfg.per_table.get(meta.qualified_name)
-            out_name = (fnames.filename_for_qualified(meta.database,
-                                                      meta.name)
-                        if multi_db else fnames.filename_for(key))
-            artifact = None
-            # a view-as-table restores from the dumped column schema; SHOW
-            # CREATE would yield view DDL, wrong to replay as a table
-            if (cfg.capture_ddl and isinstance(cat, JdbcCatalog)
-                    and not meta.is_view):
-                from mydumper_spark.sources.ddl_capture import capture_table_ddl
-                from mydumper_spark.sources.server_detect import ServerProduct
-
-                product = dialect.product if dialect else ServerProduct.UNKNOWN
-                artifact = capture_table_ddl(
-                    lambda sql: cat._q(sql).collect(), product,
-                    meta.database, meta.name, conn=capture_conn,
-                )
-            work.append((key, db_rec, meta, tt, out_name, artifact))
-        schema_objects = _capture_objects(
-            cat, dialect, cfg, {item[0] for item in work}, multi_db,
-            capture_conn)
-
-        if cfg.dry_run:
-            # --dry-run for incremental dumps too (the CLI accepts the
-            # combination): the plan after metadata-only phase 1 — which
-            # tables would diff against which parent entries — zero data
-            # reads, zero writes
-            return {
-                "dry_run": True,
-                "format": "parquet",
-                "output_dir": cfg.output_dir,
-                "incremental_parent": os.path.abspath(parent_dir),
-                "tables": {
-                    key: {
-                        "database": db_rec,
-                        "output_name": out_name,
-                        "row_estimate": meta.row_estimate,
-                        "in_parent": key in parent_doc["tables"],
-                    }
-                    for key, db_rec, meta, tt, out_name, artifact in work
-                },
-                "objects": [
-                    {"kind": obj.kind, "database": obj.database,
-                     "name": obj.name}
-                    for _, obj in schema_objects
-                ],
-            }
-
-        # --- phase 2 (pooled): per-table diff → delta/deletes write →
-        # reconstruction checksum. Three Spark jobs per table, each far
-        # too small to saturate the cluster alone.
-        inc_disk_limits = (_parse_disk_limits(cfg.disk_limits)
-                           if cfg.disk_limits else None)
-        inc_throttle = _build_throttle_gate(cfg)
-
-        def run_table(item):
-            key, db_rec, meta, tt, out_name, artifact = item
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "dump")
-            spark.sparkContext.setLocalProperty(
-                "spark.job.description", f"dump-incremental {key}")
-            if inc_disk_limits is not None:  # --disk-limits applies here too
-                _wait_for_disk(cfg, *inc_disk_limits)
-            if inc_throttle is not None:
-                inc_throttle.wait()
-            cur = apply_transform(cat.read(meta, cfg.chunks_per_table), tt,
-                                  global_where=cfg.global_where)
-            if tt is not None and "DATA" not in tt.object_scope:  # P11
-                entry = build_entry(cur.limit(0), key, manifest.algorithm,
-                                    path=None, database=db_rec)
-                return key, entry, artifact, out_name
-            parent_entry = parent_doc["tables"].get(key)
-            # a PARTIAL composite PK is not a key: diffing on the surviving
-            # subset would explode the full-outer join and corrupt the
-            # reconstruction — only an intact PK qualifies for delta mode
-            pk = (list(meta.primary_key)
-                  if meta.primary_key
-                  and all(c in cur.columns for c in meta.primary_key)
-                  else [])
-            if parent_entry is None or not pk or parent_entry.get("path") is None:
-                # new table / no PK / schema-only parent: full re-dump
-                path = os.path.join(cfg.output_dir, f"{out_name}.parquet")
-                write_parquet(cur, path, cfg.max_records_per_file)
-                entry = build_entry(spark.read.parquet(path), key,
-                                    manifest.algorithm, path=path,
-                                    database=db_rec, checksum=cfg.checksum)
-                return key, entry, artifact, out_name
-            old = materialized_table(spark, parent_dir, key)
-            d = snapshot_diff(old, cur, pk).localCheckpoint(eager=True)
-            adds = d.where(
-                F.col("status").isin("added", "changed")).select(*pk)
-            dels = d.where(F.col("status") == "deleted").select(*pk)
-            # no forced broadcast: the changed-key set is unbounded (a bulk
-            # UPDATE touches the whole table) — AQE picks broadcast when the
-            # delta really is a sliver and a shuffled join when it is not
-            path = os.path.join(cfg.output_dir, f"{out_name}.delta.parquet")
-            write_parquet(cur.join(adds, pk, "left_semi"), path,
-                          cfg.max_records_per_file)
-            del_path = os.path.join(cfg.output_dir,
-                                    f"{out_name}.deletes.parquet")
-            write_parquet(dels, del_path)
-            counts = {
-                row["status"]: row["count"]
-                for row in d.groupBy("status").count().collect()
-            }
-            # the entry checksums the RECONSTRUCTED state (parent ⊎ written
-            # delta), not the source scan — a bad delta write fails verify
-            entry = build_entry(
-                _materialize_from_parts(spark, parent_dir, key, path,
-                                        del_path, pk),
-                key, manifest.algorithm, path=path, database=db_rec,
-                checksum=cfg.checksum)
-            entry.incremental = {
-                "pk": pk,
-                "delete_path": del_path,
-                "added": int(counts.get("added", 0)),
-                "changed": int(counts.get("changed", 0)),
-                "deleted": int(counts.get("deleted", 0)),
-                "parent_rows": parent_entry["rows"],
-            }
-            return key, entry, artifact, out_name
-
-        n_threads = max(1, int(cfg.dump_threads))
-        if n_threads > 1 and len(work) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=n_threads) as ex:
-                results = list(ex.map(run_table, work))
-        else:
-            results = [run_table(item) for item in work]
-
-        # --- phase 3 (sequential): merge in catalog order
-        for key, entry, artifact, out_name in results:
-            _attach_schema_artifact(entry, artifact, out_name,
-                                    cfg.output_dir)
-            manifest.tables[key] = entry
-        _write_object_artifacts(
-            manifest, schema_objects, fnames, cfg.output_dir,
-            view_dep_engine=cfg.table_engine_for_view_dependency)
-    finally:
-        if fence is not None:
-            fence.release()
-        if capture_conn is not None and hasattr(capture_conn, "close"):
-            try:
-                capture_conn.close()
-            except Exception:
-                pass
     with open(os.path.join(parent_dir, "_manifest.json"), "rb") as f:
         manifest.source_info["parent_manifest_md5"] = _hashlib.md5(
             f.read()).hexdigest()
-    manifest.finish()
-    write_manifest(manifest, cfg.output_dir)
-    return manifest
+
+    def write_table(key, db_rec, meta, cur, out_name):
+        # per table: diff → delta/deletes write → reconstruction checksum
+        parent_entry = parent_doc["tables"].get(key)
+        # a PARTIAL composite PK is not a key: diffing on the surviving
+        # subset would explode the full-outer join and corrupt the
+        # reconstruction — only an intact PK qualifies for delta mode
+        pk = (list(meta.primary_key)
+              if meta.primary_key
+              and all(c in cur.columns for c in meta.primary_key)
+              else [])
+        if parent_entry is None or not pk or parent_entry.get("path") is None:
+            # new table / no PK / schema-only parent: full re-dump
+            path = os.path.join(cfg.output_dir, f"{out_name}.parquet")
+            write_parquet(cur, path, cfg.max_records_per_file)
+            entry = build_entry(spark.read.parquet(path), key,
+                                manifest.algorithm, path=path,
+                                database=db_rec, checksum=cfg.checksum)
+            return entry, None
+        old = materialized_table(spark, parent_dir, key)
+        d = snapshot_diff(old, cur, pk).localCheckpoint(eager=True)
+        adds = d.where(
+            F.col("status").isin("added", "changed")).select(*pk)
+        dels = d.where(F.col("status") == "deleted").select(*pk)
+        # no forced broadcast: the changed-key set is unbounded (a bulk
+        # UPDATE touches the whole table) — AQE picks broadcast when the
+        # delta really is a sliver and a shuffled join when it is not
+        path = os.path.join(cfg.output_dir, f"{out_name}.delta.parquet")
+        write_parquet(cur.join(adds, pk, "left_semi"), path,
+                      cfg.max_records_per_file)
+        del_path = os.path.join(cfg.output_dir,
+                                f"{out_name}.deletes.parquet")
+        write_parquet(dels, del_path)
+        counts = {
+            row["status"]: row["count"]
+            for row in d.groupBy("status").count().collect()
+        }
+        # the entry checksums the RECONSTRUCTED state (parent ⊎ written
+        # delta), not the source scan — a bad delta write fails verify
+        entry = build_entry(
+            _materialize_from_parts(spark, parent_dir, key, path,
+                                    del_path, pk),
+            key, manifest.algorithm, path=path, database=db_rec,
+            checksum=cfg.checksum)
+        entry.incremental = {
+            "pk": pk,
+            "delete_path": del_path,
+            "added": int(counts.get("added", 0)),
+            "changed": int(counts.get("changed", 0)),
+            "deleted": int(counts.get("deleted", 0)),
+            "parent_rows": parent_entry["rows"],
+        }
+        return entry, None
+
+    return _run_dump(
+        spark, source_dir, cfg, manifest, "dump-incremental", write_table,
+        lambda key, tt: {"in_parent": key in parent_doc["tables"]},
+        {"incremental_parent": manifest.parent_manifest})
 
 
 def _materialize_from_parts(spark, parent_dir, table, delta_path, del_path, pk):
@@ -2423,36 +2357,25 @@ def source_drift(spark: SparkSession, dump_root: str, source: str,
     flags. Returns {table: {"in_sync": bool|None, ...}}; tables now absent
     from the source report in_sync=None with a reason, as do entries
     dumped without checksums."""
-    from mydumper_spark.catalog import JdbcCatalog
     from mydumper_spark.functions.checksum import table_checksum
     from mydumper_spark.sinks.manifest import manifest_algorithm, read_manifest
 
     cfg = cfg or DumpConfig(output_dir=dump_root)
     doc = read_manifest(dump_root)
     algo = manifest_algorithm(doc)
-    cat, fence, _dialect = _open_source(spark, source, cfg)
     out: dict[str, dict] = {}
-    try:
-        metas = cat.discover(cfg.filters, **(
-            {"include_views": True}
-            if cfg.views_as_tables and isinstance(cat, JdbcCatalog)
-            else {}))
-        multi_db = len({m.database for m in metas}) > 1
-        by_key = {(m.qualified_name if multi_db else m.name): m
-                  for m in metas}
+    with _open_source(spark, source, cfg) as (cat, _fence, _dialect):
+        plan = {key: (meta, tt) for key, _, meta, tt in _plan_tables(cat, cfg)}
         for t, entry in doc["tables"].items():
             if entry.get("data_checksum") is None:
                 out[t] = {"in_sync": None,
                           "reason": "dump ran without checksums"}
                 continue
-            meta = by_key.get(t)
-            if meta is None:
+            if t not in plan:
                 out[t] = {"in_sync": None,
                           "reason": "table absent from source"}
                 continue
-            tt = cfg.per_table.get(t)
-            if tt is None and not multi_db:
-                tt = cfg.per_table.get(meta.qualified_name)
+            meta, tt = plan[t]
             df = apply_transform(cat.read(meta, cfg.chunks_per_table), tt,
                                  global_where=cfg.global_where)
             cs = table_checksum(df, algorithm=algo)
@@ -2463,7 +2386,4 @@ def source_drift(spark: SparkSession, dump_root: str, source: str,
                          "checksum": entry["data_checksum"]},
                 "source": {"rows": cs["rows"], "checksum": cs["checksum"]},
             }
-    finally:
-        if fence is not None:
-            fence.release()
     return out

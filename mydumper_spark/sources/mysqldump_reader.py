@@ -26,7 +26,13 @@ import re
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-from mydumper_spark.sources.sqllex import CODE, COMMENT, STRING, SqlLexer
+from mydumper_spark.sources.sqllex import (
+    CODE,
+    COMMENT,
+    STRING,
+    SqlLexer,
+    toplevel,
+)
 
 #: strip MySQL version-gated comment wrappers /*!NNNNN ... */ for ROUTING
 #: decisions (the raw text is preserved in artifacts)
@@ -50,11 +56,21 @@ _RE_OBJ = re.compile(
     re.I | re.S)
 
 
+#: the residual closer of a version gate whose opener is already stripped
+_GATE_CLOSER = re.compile(r"\s?\*/")
+
+
 def _ungate(s: str) -> str:
     """Remove the residual ``*/`` closers of interleaved version gates
     (``/*!50003 CREATE*/ /*!50017 DEFINER=…*/ /*!50003 TRIGGER …``) from
-    an object's replayable DDL — the openers are already stripped."""
-    return re.sub(r"\s?\*/", "", s)
+    an object's replayable DDL — the openers are already stripped. Only
+    closers in code go: a ``'*/'`` literal is the object's data."""
+    out, pos = [], 0
+    for m in toplevel(_GATE_CLOSER, s):
+        out.append(s[pos:m.start()])
+        pos = m.end()
+    out.append(s[pos:])
+    return "".join(out)
 
 
 @dataclass

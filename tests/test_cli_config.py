@@ -159,6 +159,27 @@ def test_dump_with_masqueraded_filenames(spark, sf_dir, tmp_path):
     assert names == [masquerade_table_name("region") + ".parquet"]
 
 
+def test_incremental_dump_with_masqueraded_filenames(spark, sf_dir, tmp_path):
+    """--masquerade-filename hides the table name in an incremental dump's
+    delta and deletes files too, and the child still restores verified."""
+    from mydumper_spark.catalog import TableFilters
+    from mydumper_spark.engine import DumpConfig, dump, dump_incremental, restore
+
+    def cfg(out):
+        return DumpConfig(output_dir=str(tmp_path / out),
+                          filters=TableFilters(tables_list={"default.nation"}),
+                          masquerade_filenames=True)
+
+    dump(spark, sf_dir, cfg("base"))
+    child = dump_incremental(spark, sf_dir, cfg("child"), str(tmp_path / "base"))
+    assert child.tables["nation"].incremental is not None
+    for out in ("base", "child"):
+        for _, dirs, files in os.walk(tmp_path / out):
+            assert not [n for n in dirs + files if "nation" in n], out
+    results = restore(spark, str(tmp_path / "child"), str(tmp_path / "target"))
+    assert results["verify"] == {"nation": True}
+
+
 # -- freshness filter --------------------------------------------------------
 
 

@@ -444,6 +444,40 @@ def test_dump_jdbc_fence_wired_end_to_end(spark, dump_db, tmp_path):
     assert "customer" in manifest.tables
 
 
+def test_dump_incremental_jdbc_fence_records_consistency(
+        spark, dump_db, tmp_path):
+    """An incremental dump runs the same S11 fence as a full dump and
+    records the same consistency position next to its lineage: GTID,
+    fence attempts and the full-window check, with the fence workers
+    released."""
+    from mydumper_spark.engine import DumpConfig, dump, dump_incremental
+    from mydumper_spark.sources.server_detect import ServerDialect, ServerProduct
+    from tests.test_chunks import _Factory, _ProbeConn
+
+    def fenced(out):
+        control = _ProbeConn(["uuid:1-7", "uuid:1-8", "uuid:1-8", "uuid:1-8"])
+        workers = [_ProbeConn(["x"]), _ProbeConn(["x"])]
+        return workers, DumpConfig(
+            output_dir=str(tmp_path / out),
+            jdbc_properties=dict(DRIVER_PROPS),
+            connection_factory=_Factory([control] + workers),
+            fence_workers=2,
+            dialect=ServerDialect(product=ServerProduct.MYSQL, major=8,
+                                  secondary=0, revision=30),
+        )
+
+    _, base_cfg = fenced("base")
+    dump(spark, dump_db, base_cfg)
+    workers, cfg = fenced("child")
+    child = dump_incremental(spark, dump_db, cfg, base_cfg.output_dir)
+    info = child.source_info
+    assert info["executed_gtid_set"] == "uuid:1-8"
+    assert info["fence_attempts"] == "2"
+    assert info["consistency"] == "gtid-stable"
+    assert len(info["parent_manifest_md5"]) == 32
+    assert all(w.log[-1] == "ROLLBACK" for w in workers)
+
+
 def test_dump_multi_schema_same_table_name_no_collision(spark, tmp_path):
     """Two schemas holding same-named tables must not collide: manifest
     keys qualify with the schema and each table keeps its own data (the

@@ -1241,6 +1241,33 @@ def test_split_mysqldump_comment_before_statement_head(tmp_path):
     assert res.skipped_statements == 0
 
 
+def test_split_mysqldump_gate_closer_inside_literal_kept(tmp_path):
+    """Only version-gate closers in code are removed from object DDL: a
+    trigger body assigning ``'*/'`` keeps its literal, while the gated
+    ``/*!50003 CREATE*/ /*!50017 DEFINER=…*/`` form still loses its
+    closers."""
+    from mydumper_spark.sources.mysqldump_reader import split_mysqldump
+
+    src = tmp_path / "trig.sql"
+    src.write_text(
+        "USE `d`;\n"
+        "CREATE TABLE `t` (\n  `id` int NOT NULL\n) ENGINE=InnoDB;\n"
+        "DELIMITER ;;\n"
+        "CREATE TRIGGER `tr` BEFORE INSERT ON `t` "
+        "FOR EACH ROW SET @x = '*/' ;;\n"
+        "/*!50003 CREATE*/ /*!50017 DEFINER=`root`@`localhost`*/ "
+        "/*!50003 TRIGGER `tr2` AFTER INSERT ON `t` "
+        "FOR EACH ROW SET @y = 1 */;;\n"
+        "DELIMITER ;\n")
+    res = split_mysqldump(str(src), str(tmp_path / "out"))
+    raw = {o["name"]: o["raw_sql"] for o in res.objects
+           if o["kind"] == "trigger"}
+    assert raw["tr"] == ("CREATE TRIGGER `tr` BEFORE INSERT ON `t` "
+                         "FOR EACH ROW SET @x = '*/';")
+    assert raw["tr2"] == ("CREATE DEFINER=`root`@`localhost` TRIGGER `tr2` "
+                          "AFTER INSERT ON `t` FOR EACH ROW SET @y = 1;")
+
+
 def test_parse_tuples_ignores_values_in_comment():
     """A commented-out ``VALUES (9)`` before the real keyword is not a
     row."""

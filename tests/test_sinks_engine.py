@@ -3151,6 +3151,31 @@ def test_read_dumped_table_engine_dat_named_like_a_chunk(spark, tmp_path):
     assert sorted(tuple(r) for r in back.collect()) == [(1, "r1"), (2, "r2")]
 
 
+def test_restore_moved_csv_dump_of_table_named_like_a_chunk(spark, tmp_path):
+    """A moved csv dump (stale absolute path in the manifest) of table
+    ``t.00001`` restores that table from the Spark directory t.00001.dat
+    in the dump root: the name-derived fallback takes a chunk prefix only
+    from a chunk FILE, never from a table named like one."""
+    import dataclasses
+
+    from mydumper_spark.sinks.manifest import build_entry, write_schema_sidecar
+    from mydumper_spark.sinks.writers import CsvFormat, write_csv
+
+    root = str(tmp_path / "moved")
+    fmt = CsvFormat()
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string")
+    write_csv(df, os.path.join(root, "t.00001.dat"), fmt)
+    write_schema_sidecar(root, "t.00001", df.schema)
+    m = Manifest(fmt="csv")
+    m.csv_dialect = dataclasses.asdict(fmt)
+    m.tables["t.00001"] = build_entry(df, "t.00001", m.algorithm,
+                                      path="/moved/away/t.00001.dat")
+    write_manifest(m, root)
+    results = restore(spark, root, str(tmp_path / "target"))
+    assert results["load"] == {"t.00001": True}
+    assert results["verify"] == {"t.00001": True}
+
+
 def test_incremental_chain_randomized_mutations(spark, tmp_path):
     """Seeded random mutation history through a THREE-generation
     incremental chain: each generation applies random deletes, changes
