@@ -213,8 +213,12 @@ class ParquetCatalog:
 
     def read(self, meta: TableMeta, num_chunks: int | None = None) -> DataFrame:
         # num_chunks is a JDBC-source concern (one SELECT per chunk); parquet
-        # scan parallelism comes from row groups / maxPartitionBytes instead
-        return self.spark.read.parquet(meta.path)
+        # scan parallelism comes from row groups / maxPartitionBytes instead.
+        # The schema discover() probed spares a second footer job.
+        reader = self.spark.read
+        if meta.schema is not None:
+            reader = reader.schema(meta.schema)
+        return reader.parquet(meta.path)
 
 
 def _rget(row, key: str):
@@ -378,8 +382,3 @@ def load_profiles(dump_dir: str) -> dict[str, list[dict]]:
     with open(path) as f:
         return json.load(f)
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Convenience: read every table in a testdata scale-factor dir."""
-    cat = ParquetCatalog(spark, sf_dir)
-    return {m.name: spark.read.parquet(m.path) for m in cat.discover()}

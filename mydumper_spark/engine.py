@@ -34,6 +34,7 @@ from mydumper_spark.sinks.writers import (
     write_jsonl,
     write_parquet,
 )
+from mydumper_spark.util import thread_map
 
 
 @dataclass
@@ -790,14 +791,7 @@ def _run_dump(spark: SparkSession, source: str, cfg: DumpConfig,
                     apply_transform(df, tt, global_where=cfg.global_where),
                     out_name)
 
-            n_threads = max(1, int(cfg.dump_threads))
-            if n_threads > 1 and len(work) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=n_threads) as ex:
-                    results = list(ex.map(run_table, work))
-            else:
-                results = [run_table(item) for item in work]
+            results = thread_map(run_table, work, cfg.dump_threads)
 
             # --- phase 3 (sequential): merge in catalog order
             profiles: dict[str, list] = {}
@@ -1003,9 +997,11 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
                 exec_per_file(path, cfg.exec_per_file)
         # read-back of the written bytes: what checksums and profiles
         # must describe (the files, not the pre-write plan). Runs for
-        # EITHER flag — profile without checksum is a valid dump.
-        written = read_dumped_table(spark, {"path": path},
-                                    csv_dialect=manifest.csv_dialect)
+        # EITHER flag — profile without checksum is a valid dump. The
+        # frame just written fixes the file schema, so no footer job.
+        written = read_dumped_table(
+            spark, {"path": path, "spark_schema": out.schema.jsonValue()},
+            csv_dialect=manifest.csv_dialect)
         if written is None:
             raise FileNotFoundError(
                 f"dump read-back: {path!r} is gone after the write")
@@ -1444,14 +1440,7 @@ def import_mydumper_dir(spark: SparkSession, src_dir: str, out_dir: str,
                            database=item["db"] if multi_db else None,
                            checksum=checksum)
 
-    n_threads = max(1, int(parallelism))
-    if n_threads > 1 and len(work_items) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=n_threads) as ex:
-            entries = list(ex.map(_import_table, work_items))
-    else:
-        entries = [_import_table(it) for it in work_items]
+    entries = thread_map(_import_table, work_items, parallelism)
 
     # --- phase 3 (sequential merge, sorted order): truncation check +
     # schema artifact + manifest insertion
@@ -1732,6 +1721,8 @@ def restore(
             t: os.path.join(target_root, f"{_target_name(t)}.parquet")
             for t in doc["tables"]
         }
+        # table → schema of the frame its DATA job overwrote the path with
+        written_schemas: dict = {}
         if purge == PurgeMode.APPEND:
             # parquet-tree analogue of the information_schema probe: a
             # table whose output path already holds data keeps its rows
@@ -1742,7 +1733,10 @@ def restore(
             }
 
         def read_target(t: str) -> DataFrame:
-            return spark.read.parquet(target_paths[t])
+            reader = spark.read
+            if t in written_schemas:
+                reader = reader.schema(written_schemas[t])
+            return reader.parquet(target_paths[t])
 
     def source_df(table: str) -> DataFrame:
         entry = doc["tables"][table]
@@ -1895,9 +1889,15 @@ def restore(
 
             def make_data_action(table=t):
                 def action():
-                    source_df(table).write.mode(purge.spark_mode).parquet(
+                    df = source_df(table)
+                    df.write.mode(purge.spark_mode).parquet(
                         target_paths[table]
                     )
+                    if purge.spark_mode == "overwrite":
+                        # the path now holds exactly this frame: verify
+                        # reads it back without a footer job. Appended
+                        # paths may mix in older files, so they infer.
+                        written_schemas[table] = df.schema
                 return action
 
         dag.add(LoadJob(table=t, phase=Phase.SCHEMA, action=make_schema_action()))
@@ -2139,24 +2139,25 @@ def restore(
         from mydumper_spark.sinks.manifest import manifest_algorithm
 
         algo = manifest_algorithm(doc)
-        checks = {}
         # ignore_errors: a table whose load failed is a verify FAILURE by
         # definition — reading the (absent/partial) target back to hash it
         # would just throw and abort the remaining verifications
         failed_data = {k[0] for k, v in dag.results.items()
                        if k[1] == Phase.DATA and not v.ok}
-        for t, entry in doc["tables"].items():
-            if t not in admitted:
-                continue  # -s/--source-db: out-of-scope schema
+        to_check = [
+            (t, entry) for t, entry in doc["tables"].items()
+            if t in admitted  # -s/--source-db: out-of-scope schema
+            # SKIP left whatever data was already there — comparing it
+            # to the manifest would flag a deliberate non-action
+            and t not in skip_existing
+            # schema-only (same predicate as schema_only above)
+            and not (entry.get("path") is None and entry["rows"] == 0)
+        ]
+
+        def verify_table(item: tuple[str, dict]) -> bool | None:
+            t, entry = item
             if t in failed_data:
-                checks[t] = False
-                continue
-            if t in skip_existing:
-                # SKIP left whatever data was already there — comparing it
-                # to the manifest would flag a deliberate non-action
-                continue
-            if entry.get("path") is None and entry["rows"] == 0:
-                continue  # schema-only (same predicate as schema_only above)
+                return False
             # --append-if-not-exist keeps pre-existing target rows, so a
             # mismatch on a table the probe found ALREADY THERE is
             # expected — indistinguishable from corruption, reported as
@@ -2169,13 +2170,15 @@ def restore(
                 # plain count, NOT table_checksum: hashing every row of the
                 # target to then read only .rows would double verify cost)
                 ok = read_target(t).count() == entry["rows"]
-                checks[t] = None if (not ok and append_unverifiable) else ok
-                continue
-            cs = table_checksum(read_target(t), algorithm=algo)
-            ok = (cs["checksum"] == entry["data_checksum"]
-                  and cs["rows"] == entry["rows"])
-            checks[t] = None if (not ok and append_unverifiable) else ok
-        results["verify"] = checks
+            else:
+                cs = table_checksum(read_target(t), algorithm=algo)
+                ok = (cs["checksum"] == entry["data_checksum"]
+                      and cs["rows"] == entry["rows"])
+            return None if (not ok and append_unverifiable) else ok
+
+        # tables verify concurrently, like the DATA phase that loaded them
+        checked = thread_map(verify_table, to_check, parallelism)
+        results["verify"] = {t: ok for (t, _), ok in zip(to_check, checked)}
     # --show-warnings (myloader_arguments.c:145 / myloader_restore.c:530):
     # the reference surfaces per-INSERT SQL warnings from the server; the
     # Spark-side analogues of "the load finished but something was
@@ -2247,6 +2250,7 @@ def dump_incremental(
 
     from mydumper_spark.operators.diff import snapshot_diff
     from mydumper_spark.sinks.manifest import (
+        apply_delta,
         build_entry,
         materialized_table,
         read_manifest,
@@ -2279,8 +2283,8 @@ def dump_incremental(
             # new table / no PK / schema-only parent: full re-dump
             path = os.path.join(cfg.output_dir, f"{out_name}.parquet")
             write_parquet(cur, path, cfg.max_records_per_file)
-            entry = build_entry(spark.read.parquet(path), key,
-                                manifest.algorithm, path=path,
+            entry = build_entry(spark.read.schema(cur.schema).parquet(path),
+                                key, manifest.algorithm, path=path,
                                 database=db_rec, checksum=cfg.checksum)
             return entry, None
         old = materialized_table(spark, parent_dir, key)
@@ -2292,8 +2296,8 @@ def dump_incremental(
         # UPDATE touches the whole table) — AQE picks broadcast when the
         # delta really is a sliver and a shuffled join when it is not
         path = os.path.join(cfg.output_dir, f"{out_name}.delta.parquet")
-        write_parquet(cur.join(adds, pk, "left_semi"), path,
-                      cfg.max_records_per_file)
+        delta = cur.join(adds, pk, "left_semi")
+        write_parquet(delta, path, cfg.max_records_per_file)
         del_path = os.path.join(cfg.output_dir,
                                 f"{out_name}.deletes.parquet")
         write_parquet(dels, del_path)
@@ -2301,11 +2305,13 @@ def dump_incremental(
             row["status"]: row["count"]
             for row in d.groupBy("status").count().collect()
         }
-        # the entry checksums the RECONSTRUCTED state (parent ⊎ written
-        # delta), not the source scan — a bad delta write fails verify
+        # the entry checksums the RECONSTRUCTED state (parent ⊎ the delta
+        # and deletes read back from disk, with the schemas just written),
+        # not the source scan — a bad delta write fails verify
         entry = build_entry(
-            _materialize_from_parts(spark, parent_dir, key, path,
-                                    del_path, pk),
+            apply_delta(old, spark.read.schema(delta.schema).parquet(path),
+                        spark.read.schema(dels.schema).parquet(del_path),
+                        pk),
             key, manifest.algorithm, path=path, database=db_rec,
             checksum=cfg.checksum)
         entry.incremental = {
@@ -2322,21 +2328,6 @@ def dump_incremental(
         spark, source_dir, cfg, manifest, "dump-incremental", write_table,
         lambda key, tt: {"in_parent": key in parent_doc["tables"]},
         {"incremental_parent": manifest.parent_manifest})
-
-
-def _materialize_from_parts(spark, parent_dir, table, delta_path, del_path, pk):
-    """Parent state ⊎ freshly WRITTEN delta/deletes — what a restore of
-    this incremental dump will reconstruct (read back from disk, so the
-    manifest checksum covers the written bytes)."""
-    from mydumper_spark.sinks.manifest import materialized_table
-
-    base = materialized_table(spark, parent_dir, table)
-    delta = spark.read.parquet(delta_path)
-    gone = spark.read.parquet(del_path).select(*pk)
-    drop = gone.unionByName(delta.select(*pk)).distinct()
-    # AQE decides the join strategy — the drop set is change volume,
-    # which nothing bounds
-    return base.join(drop, pk, "left_anti").unionByName(delta)
 
 
 def source_drift(spark: SparkSession, dump_root: str, source: str,

@@ -21,6 +21,8 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from mydumper_spark.util import thread_map
+
 
 class Phase(enum.IntEnum):
     SCHEMA = 0
@@ -183,13 +185,7 @@ class LoaderDag:
                         f"dependency cycle or failed deps in phase {phase.name}: {stuck}")
                 width = min(self.parallelism,
                             self.phase_caps.get(phase, self.parallelism))
-                if width > 1 and len(ready) > 1:
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    with ThreadPoolExecutor(max_workers=width) as ex:
-                        outs = list(ex.map(self._run_one, ready))
-                else:
-                    outs = [self._run_one(j) for j in ready]
+                outs = thread_map(self._run_one, ready, width)
                 progressed = False
                 failures: list[LoadJob] = []
                 for j, res in zip(ready, outs):

@@ -20,6 +20,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from mydumper_spark.functions.checksum import table_checksum
+from mydumper_spark.util import thread_map
 
 
 @dataclass
@@ -30,6 +31,12 @@ class TableEntry:
     #: (restore ordering O4 needs them) but L9 verification is skipped
     data_checksum: int | None
     schema_checksum: str
+    #: the read-back Spark schema (``StructType.jsonValue()``) the two
+    #: checksums describe — what :func:`read_dumped_table` hands
+    #: ``spark.read.schema`` for parquet/orc, so reading the program's own
+    #: files runs no footer (schema-inference) job. None in manifests
+    #: that predate it.
+    spark_schema: dict | None = None
     path: str | None = None
     #: raw source DDL artifact (`<name>-schema.sql`, the reference's
     #: db.table-schema.sql, mydumper_jobs.c:274) — None when the source
@@ -130,6 +137,7 @@ def build_entry(df: DataFrame, name: str, algorithm: str,
         rows=rows,
         data_checksum=dcs,
         schema_checksum=_schema_checksum(df),
+        spark_schema=df.schema.jsonValue(),
         path=path,
         database=database,
     )
@@ -183,6 +191,8 @@ def write_manifest(manifest: Manifest, root: str, partial: bool = False) -> str:
                 "rows": e.rows,
                 "data_checksum": e.data_checksum,
                 "schema_checksum": e.schema_checksum,
+                **({"spark_schema": e.spark_schema}
+                   if e.spark_schema is not None else {}),
                 "path": e.path,
                 "database": e.database,
                 **({"schema_sql_path": e.schema_sql_path,
@@ -298,9 +308,11 @@ def read_dumped_table(spark, entry: dict,
     """Typed read of one manifest entry's dumped data — the one place a
     recorded data path becomes a DataFrame (dump read-back, restore,
     verify). Dispatches on the recorded path's format: parquet and orc
-    directly; jsonl, csv (``.dat``) and sql chunks through their schema
-    sidecar (all three are stringly-typed on disk — inference would not
-    round-trip the dumped types), csv additionally through the dialect
+    directly, with the entry's recorded ``spark_schema`` when it has one
+    (inference only for entries that predate it); jsonl, csv (``.dat``)
+    and sql chunks through their schema sidecar (all three are
+    stringly-typed on disk — inference would not round-trip the dumped
+    types), csv additionally through the dialect
     the manifest recorded at dump time (``csv_dialect``). Returns None
     when the path is gone, when the dump genuinely lacks the sidecar
     (written before it existed), or for --exec-per-thread chunks, which
@@ -310,7 +322,7 @@ def read_dumped_table(spark, entry: dict,
     if not path or not os.path.exists(path):
         return None
     if path.endswith(".parquet"):
-        return spark.read.parquet(path)
+        return _recorded_schema_reader(spark, entry).parquet(path)
     directory, base = os.path.split(path)
     # reference-layout chunks ({name}.NNNNN.sql|dat[.ext]) are FILES: an
     # engine csv dump of a table whose name ends in digits (db `t`, table
@@ -339,7 +351,7 @@ def read_dumped_table(spark, entry: dict,
         return read_csv_typed(spark, dat_chunk_paths(path), schema,
                               _dialect_format(csv_dialect))
     if path.endswith(".orc"):
-        return spark.read.orc(path)
+        return _recorded_schema_reader(spark, entry).orc(path)
     name, suffix = os.path.splitext(base)
     if suffix not in (".jsonl", ".dat"):
         return None
@@ -351,6 +363,17 @@ def read_dumped_table(spark, entry: dict,
     from mydumper_spark.sinks.writers import read_csv_typed
 
     return read_csv_typed(spark, path, schema, _dialect_format(csv_dialect))
+
+
+def _recorded_schema_reader(spark, entry: dict):
+    """``spark.read`` bound to the entry's recorded schema, so the read
+    skips the footer job that schema inference runs."""
+    recorded = entry.get("spark_schema")
+    if recorded is None:
+        return spark.read
+    from pyspark.sql import types as T
+
+    return spark.read.schema(T.StructType.fromJson(recorded))
 
 
 def _dialect_format(csv_dialect: dict | None):
@@ -453,12 +476,18 @@ def materialized_table(spark, dump_root: str, table: str):
              else base.limit(0))
     gone = (spark.read.parquet(inc["delete_path"]).select(*pk)
             if inc.get("delete_path") else delta.select(*pk).limit(0))
+    return apply_delta(base, delta, gone, pk)
+
+
+def apply_delta(base, delta, gone, pk: list[str]):
+    """One incremental generation over ``base``: drop the deleted keys
+    (``gone``, pk columns only) and the changed ones, then add the delta
+    rows (added + changed)."""
     # changed keys appear in BOTH the delta (new version) and the drop set.
     # No forced broadcast: change volume is unbounded (a bulk UPDATE makes
     # the drop set table-sized) — AQE broadcasts real slivers by itself
     drop = gone.unionByName(delta.select(*pk)).distinct()
-    kept = base.join(drop, pk, "left_anti")
-    return kept.unionByName(delta)
+    return base.join(drop, pk, "left_anti").unionByName(delta)
 
 
 def verify_manifest(spark, root: str) -> dict[str, dict]:
@@ -469,40 +498,59 @@ def verify_manifest(spark, root: str) -> dict[str, dict]:
     manifest-recorded dialect — the reference verifies its native csv
     format too); a data path that no longer exists, or a dump predating
     the sidecar, returns ok=None with its reason instead of crashing.
-    Returns {table: {"ok": bool|None, "expected": ..., "actual": ...}}."""
+
+    Files are read with their ON-DISK schema (inference for parquet/orc,
+    never the recorded ``spark_schema``): a file rewritten with a renamed,
+    dropped, added or retyped column fails on ``schema_checksum`` with a
+    reason, before any data checksum runs — trusting the recorded schema
+    would pass an added column and turn a retyped one into a reader
+    error. Tables verify concurrently on a thread pool
+    (``min(tables, defaultParallelism)`` threads); results keep manifest
+    order. Returns {table: {"ok": bool|None, "expected": ..., "actual":
+    ...}}."""
     doc = read_manifest(root)
     algo = manifest_algorithm(doc)
     csv_dialect = doc.get("config", {}).get("csv_dialect")
-    results = {}
-    for t, entry in doc["tables"].items():
+
+    def verify_table(item: tuple[str, dict]) -> dict:
+        t, entry = item
         if not entry.get("path"):
-            results[t] = {"ok": None, "reason": "no data path recorded"}
-            continue
+            return {"ok": None, "reason": "no data path recorded"}
         if entry.get("data_checksum") is None:
-            results[t] = {"ok": None,
-                          "reason": "dump ran without checksums"}
-            continue
+            return {"ok": None, "reason": "dump ran without checksums"}
         if not os.path.exists(entry["path"]):
-            results[t] = {"ok": None,
-                          "reason": f"data path {entry['path']!r} does not "
-                                    "exist (moved or deleted)"}
-            continue
+            return {"ok": None,
+                    "reason": f"data path {entry['path']!r} does not "
+                              "exist (moved or deleted)"}
         if entry.get("incremental"):
             # delta entry: checksums cover the reconstructed full state
             df = materialized_table(spark, root, t)
         else:
-            df = read_dumped_table(spark, entry, csv_dialect=csv_dialect)
+            df = read_dumped_table(spark, dict(entry, spark_schema=None),
+                                   csv_dialect=csv_dialect)
         if df is None:
-            results[t] = {
+            return {
                 "ok": None,
                 "reason": f"format of {entry['path']!r} cannot be re-read "
                           "for verification (dump predates schema sidecar)",
             }
-            continue
+        schema_cs = _schema_checksum(df)
+        if schema_cs != entry["schema_checksum"]:
+            return {
+                "ok": False,
+                "reason": f"schema of {entry['path']!r} changed since the "
+                          f"dump: {df.schema.simpleString()} on disk",
+                "expected": {"schema_checksum": entry["schema_checksum"]},
+                "actual": {"schema_checksum": schema_cs},
+            }
         cs = table_checksum(df, algorithm=algo)
-        results[t] = {
+        return {
             "ok": cs["checksum"] == entry["data_checksum"] and cs["rows"] == entry["rows"],
             "expected": {"rows": entry["rows"], "checksum": entry["data_checksum"]},
             "actual": {"rows": cs["rows"], "checksum": cs["checksum"]},
         }
-    return results
+
+    items = list(doc["tables"].items())
+    checked = thread_map(verify_table, items,
+                         spark.sparkContext.defaultParallelism)
+    return {t: r for (t, _), r in zip(items, checked)}

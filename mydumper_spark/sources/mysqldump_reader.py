@@ -34,10 +34,6 @@ from mydumper_spark.sources.sqllex import (
     toplevel,
 )
 
-#: strip MySQL version-gated comment wrappers /*!NNNNN ... */ for ROUTING
-#: decisions (the raw text is preserved in artifacts)
-_VERSION_GATE = re.compile(r"/\*!\d{5}\s?|\s?\*/\s*$")
-
 _RE_CREATE_DB = re.compile(
     r"^CREATE\s+DATABASE\s+(?:/\*!\d+\s+IF\s+NOT\s+EXISTS\s*\*/\s*|IF\s+NOT"
     r"\s+EXISTS\s+)?`?([^`\s]+)`?", re.I)
@@ -56,17 +52,17 @@ _RE_OBJ = re.compile(
     re.I | re.S)
 
 
-#: the residual closer of a version gate whose opener is already stripped
-_GATE_CLOSER = re.compile(r"\s?\*/")
+#: a MySQL version gate's opener (``/*!NNNNN``) or closer (``*/``)
+_GATE = re.compile(r"/\*!\d{5}\s?|\s?\*/")
 
 
 def _ungate(s: str) -> str:
-    """Remove the residual ``*/`` closers of interleaved version gates
-    (``/*!50003 CREATE*/ /*!50017 DEFINER=…*/ /*!50003 TRIGGER …``) from
-    an object's replayable DDL — the openers are already stripped. Only
-    closers in code go: a ``'*/'`` literal is the object's data."""
+    """Remove the openers and closers of version gates, interleaved ones
+    included (``/*!50003 CREATE*/ /*!50017 DEFINER=…*/ /*!50003 TRIGGER
+    …``), leaving replayable DDL. Only markers in code go: a ``'*/'`` or
+    ``'/*!50003'`` literal is the object's data."""
     out, pos = [], 0
-    for m in toplevel(_GATE_CLOSER, s):
+    for m in toplevel(_GATE, s):
         out.append(s[pos:m.start()])
         pos = m.end()
     out.append(s[pos:])
@@ -223,15 +219,14 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
                   errors="surrogateescape") as fh:
             for raw, code in _statements(fh):
                 gated = code.startswith("/*!")
-                # strip every gate opener AND residual closer (`CREATE
-                # DATABASE /*!32312 IF NOT EXISTS*/ …` leaves a
-                # mid-statement ``*/``): ``s`` is the replayable artifact
+                # strip every gate opener and closer in code (`CREATE
+                # DATABASE /*!32312 IF NOT EXISTS*/ …` has both
+                # mid-statement): ``s`` is the replayable artifact
                 # text, ``route`` the comment-free copy the regexes match
                 # (`CREATE /* x */ TABLE`); data INSERTs are written from
                 # ``raw``, so a ``*/`` inside a value is untouched
-                s = _ungate(_VERSION_GATE.sub("", raw)).strip()
-                route = (s if code is raw
-                         else _ungate(_VERSION_GATE.sub("", code)).strip())
+                s = _ungate(raw).strip()
+                route = s if code is raw else _ungate(code).strip()
                 m = _RE_USE.match(route)
                 if m:
                     current_db = m.group(1)
@@ -302,7 +297,7 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
                     res.tables.pop(key, None)
                     res.objects.append({"kind": "view", "database": db,
                                         "name": bare,
-                                        "raw_sql": _ungate(s) + ";",
+                                        "raw_sql": s + ";",
                                         "table": None})
                     continue
                 mo = _RE_OBJ.match(route)
@@ -313,7 +308,7 @@ def split_mysqldump(path: str, out_dir: str) -> SplitResult:
                     _, db, bare = key_for(name)
                     res.objects.append({"kind": kind, "database": db,
                                         "name": bare,
-                                        "raw_sql": _ungate(s) + ";",
+                                        "raw_sql": s + ";",
                                         "table": None})
                     continue
                 # session plumbing (SET, LOCK TABLES, DROP TABLE, …) and

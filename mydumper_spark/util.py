@@ -254,3 +254,19 @@ def read_text_head(path: str, n: int, spark=None) -> str:
             "utf-8", "surrogateescape")[:n]
     with open(path, encoding="utf-8", errors="surrogateescape") as fh:
         return fh.read(n)
+
+
+def thread_map(fn: Callable, items, n_threads: int) -> list:
+    """``[fn(x) for x in items]`` on a thread pool of up to
+    ``n_threads`` threads — the shape of every per-table step: each item
+    is an independent chain of Spark jobs, and pool threads overlap them.
+    With fewer than two threads or items it runs on the calling thread.
+    Results keep ``items`` order; an exception from ``fn`` propagates."""
+    items = list(items)
+    n = min(int(n_threads), len(items))
+    if n <= 1:
+        return [fn(x) for x in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=n) as ex:
+        return list(ex.map(fn, items))

@@ -1268,6 +1268,31 @@ def test_split_mysqldump_gate_closer_inside_literal_kept(tmp_path):
                           "AFTER INSERT ON `t` FOR EACH ROW SET @y = 1;")
 
 
+def test_split_mysqldump_gate_opener_inside_literal_kept(tmp_path):
+    """The opener twin of the closer test above: a trigger body assigning
+    ``'a /*!50003 b'`` keeps its literal byte for byte, while a gated
+    definition still loses its openers."""
+    from mydumper_spark.sources.mysqldump_reader import split_mysqldump
+
+    src = tmp_path / "trig.sql"
+    src.write_text(
+        "USE `d`;\n"
+        "CREATE TABLE `t` (\n  `id` int NOT NULL\n) ENGINE=InnoDB;\n"
+        "DELIMITER ;;\n"
+        "CREATE TRIGGER `tr` BEFORE INSERT ON `t` "
+        "FOR EACH ROW SET @x = 'a /*!50003 b' ;;\n"
+        "/*!50003 CREATE*/ /*!50003 TRIGGER `tr2` AFTER INSERT ON `t` "
+        "FOR EACH ROW SET @y = \"/*!50003\" */;;\n"
+        "DELIMITER ;\n")
+    res = split_mysqldump(str(src), str(tmp_path / "out"))
+    raw = {o["name"]: o["raw_sql"] for o in res.objects
+           if o["kind"] == "trigger"}
+    assert raw["tr"] == ("CREATE TRIGGER `tr` BEFORE INSERT ON `t` "
+                         "FOR EACH ROW SET @x = 'a /*!50003 b';")
+    assert raw["tr2"] == ("CREATE TRIGGER `tr2` AFTER INSERT ON `t` "
+                          "FOR EACH ROW SET @y = \"/*!50003\";")
+
+
 def test_parse_tuples_ignores_values_in_comment():
     """A commented-out ``VALUES (9)`` before the real keyword is not a
     row."""
