@@ -492,7 +492,11 @@ def a4_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4/A5: portable per-table checksum (bit_xor of 60-bit md5-fold) — the
     manifest entry + restore-verification aggregate. All 10 tables flow
     through ONE tagged aggregation (checksum_tables_df) instead of 10
-    independent final-agg exchanges — same rows, ~¼ the stages (r14)."""
+    independent final-agg exchanges — same rows, ~¼ the stages (r14).
+    Empty tables keep their (NULL, 0) row through NULL-hash marker rows
+    built on the JVM, so the plan has no join and no Python-side scan: a
+    run starts no Python worker, as the reference's in-server
+    ``BIT_XOR(CRC32(...))`` sends nothing out of the database."""
     from mydumper_spark.functions.checksum import checksum_tables_df
 
     tables = {

@@ -900,7 +900,9 @@ def cmd_prepare_stream(args: argparse.Namespace) -> int:
                 # migrated into batch=-1 before the stream started, so the
                 # partition column is always present post-upgrade
             else:  # genuinely the first batch; a corrupt store still raises
-                known = spark.createDataFrame([], "fp string")
+                from mydumper_spark.util import empty_frame
+
+                known = empty_frame(spark, "fp string")
             survivors, _all_fps = exact_dedup_incremental(df, known)
             df = survivors.persist()  # two writes below share one compute
         df.write.mode("overwrite").parquet(

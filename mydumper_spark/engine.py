@@ -34,7 +34,7 @@ from mydumper_spark.sinks.writers import (
     write_jsonl,
     write_parquet,
 )
-from mydumper_spark.util import thread_map
+from mydumper_spark.util import empty_frame, thread_map
 
 
 @dataclass
@@ -1098,7 +1098,7 @@ def import_mysqldump(spark: SparkSession, dumpfile: str, out_dir: str,
         if t["data_path"]:
             df = read_insert_sql(spark, t["data_path"], schema)
         else:  # schema-only table (mysqldump of an empty table)
-            df = spark.createDataFrame([], schema)
+            df = empty_frame(spark, schema)
             # an empty chunk keeps path-based consumers (verify, restore)
             # on the same route as populated tables
             t["data_path"] = os.path.join(out_dir, f"{key}.00000.sql")
@@ -1431,7 +1431,7 @@ def import_mydumper_dir(spark: SparkSession, src_dir: str, out_dir: str,
             df = read_dump_table(spark, out, item["qual"],
                                  schema=item["schema"])
         else:
-            df = spark.createDataFrame([], item["schema"])
+            df = empty_frame(spark, item["schema"])
         # sidecar named after the chunk prefix (db.table), the name a
         # chunk path's typed read looks up
         write_schema_sidecar(out, item["qual"], df.schema)
@@ -2308,15 +2308,17 @@ def dump_incremental(
         # the entry checksums the RECONSTRUCTED state (parent ⊎ the delta
         # and deletes read back from disk, with the schemas just written),
         # not the source scan — a bad delta write fails verify
-        entry = build_entry(
-            apply_delta(old, spark.read.schema(delta.schema).parquet(path),
-                        spark.read.schema(dels.schema).parquet(del_path),
-                        pk),
-            key, manifest.algorithm, path=path, database=db_rec,
-            checksum=cfg.checksum)
+        delta = spark.read.schema(delta.schema).parquet(path)
+        dels = spark.read.schema(dels.schema).parquet(del_path)
+        entry = build_entry(apply_delta(old, delta, dels, pk), key,
+                            manifest.algorithm, path=path, database=db_rec,
+                            checksum=cfg.checksum)
         entry.incremental = {
             "pk": pk,
             "delete_path": del_path,
+            # what materialized_table reads these files back with
+            "delta_schema": delta.schema.jsonValue(),
+            "delete_schema": dels.schema.jsonValue(),
             "added": int(counts.get("added", 0)),
             "changed": int(counts.get("changed", 0)),
             "deleted": int(counts.get("deleted", 0)),

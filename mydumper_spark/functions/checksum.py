@@ -161,31 +161,38 @@ def checksum_tables_df(tables: "dict[str, DataFrame]",
     AQE stages (r14: the two a4 bench entries spent most of their wall in
     per-branch stage scheduling, ~40 Exchange nodes between them). Each
     input still goes through the ``ensure_min_partitions`` parallelism
-    floor exactly like :func:`checksum_df`. The literal-name left join at
-    the end (broadcast, N rows) restores rows for empty tables, which a
-    groupBy alone would drop."""
+    floor exactly like :func:`checksum_df`.
+
+    Empty tables keep their row through one NULL-hash marker row per
+    table, unioned into the same aggregate: a row hash is never NULL
+    (``xxhash64`` and ``conv(md5…)`` always return a value), so
+    ``bit_xor`` and ``count`` of ``__rh`` skip the markers and every group
+    exists even when its table has no rows. The markers are one
+    ``range(1)`` row exploded over literal names — a JVM-side relation,
+    with no join and no Python-side ``createDataFrame`` (whose
+    ``Scan ExistingRDD`` would start the Python worker daemon)."""
     from mydumper_spark.util import ensure_min_partitions
 
     spark = next(iter(tables.values())).sparkSession
-    hashed = None
+    hashed = spark.range(1).select(
+        F.explode(F.array(*[F.lit(n) for n in tables])).alias("table_name"),
+        F.lit(None).cast("bigint").alias("__rh"),
+    )
     for name, df in tables.items():
         # spread only tables big enough for parallel hashing to beat the
-        # extra exchange stage (~2 MB ≈ well under 0.1 s of single-core
-        # row-hashing); production tables always clear the bar
+        # extra exchange stage. Measured on a 4-vCPU host: lineitem at
+        # sf0.01 (1.05 MB) takes about 0.3 s of single-core md5 hashing,
+        # yet lowering the bar to 512 KB or 128 KB made the 10-table a4
+        # sweep slower (median about 1.8 → 2.3 s) — below 2 MB the extra
+        # stage costs more than it saves; production tables always clear it
         df = ensure_min_partitions(df, min_bytes=2 * 1024 * 1024)
-        part = df.select(
+        hashed = hashed.unionAll(df.select(
             F.lit(name).alias("table_name"),
             row_hash(df, None, algorithm).alias("__rh"),
-        )
-        hashed = part if hashed is None else hashed.unionAll(part)
-    agg = hashed.groupBy("table_name").agg(
+        ))
+    return hashed.groupBy("table_name").agg(
         F.expr("bit_xor(__rh)").alias("checksum"),
-        F.count(F.lit(1)).alias("rows"),
-    )
-    names = spark.createDataFrame([(n,) for n in tables], "table_name string")
-    return names.join(agg, "table_name", "left").select(
-        "table_name", "checksum",
-        F.coalesce("rows", F.lit(0).cast("bigint")).alias("rows"),
+        F.count("__rh").alias("rows"),
     )
 
 

@@ -49,8 +49,10 @@ class TableEntry:
     #: captured from the source catalog — what engine.restore replays as
     #: phase-ordered DDL on the target (L6/L7)
     schema_def: dict | None = None
-    #: incremental-dump record: {pk, delete_path, added, changed, deleted,
-    #: parent_rows} — set when ``path`` holds a delta, not a full table;
+    #: incremental-dump record: {pk, delete_path, delta_schema,
+    #: delete_schema, added, changed, deleted, parent_rows} — set when
+    #: ``path`` holds a delta, not a full table (the two schemas are the
+    #: delta and deletes files' own, read back without inference);
     #: rows/data_checksum describe the reconstructed FULL state
     incremental: dict | None = None
     #: source schema/database for multi-schema dumps (the manifest key is
@@ -322,7 +324,8 @@ def read_dumped_table(spark, entry: dict,
     if not path or not os.path.exists(path):
         return None
     if path.endswith(".parquet"):
-        return _recorded_schema_reader(spark, entry).parquet(path)
+        return _recorded_schema_reader(
+            spark, entry.get("spark_schema")).parquet(path)
     directory, base = os.path.split(path)
     # reference-layout chunks ({name}.NNNNN.sql|dat[.ext]) are FILES: an
     # engine csv dump of a table whose name ends in digits (db `t`, table
@@ -351,7 +354,8 @@ def read_dumped_table(spark, entry: dict,
         return read_csv_typed(spark, dat_chunk_paths(path), schema,
                               _dialect_format(csv_dialect))
     if path.endswith(".orc"):
-        return _recorded_schema_reader(spark, entry).orc(path)
+        return _recorded_schema_reader(
+            spark, entry.get("spark_schema")).orc(path)
     name, suffix = os.path.splitext(base)
     if suffix not in (".jsonl", ".dat"):
         return None
@@ -365,10 +369,10 @@ def read_dumped_table(spark, entry: dict,
     return read_csv_typed(spark, path, schema, _dialect_format(csv_dialect))
 
 
-def _recorded_schema_reader(spark, entry: dict):
-    """``spark.read`` bound to the entry's recorded schema, so the read
-    skips the footer job that schema inference runs."""
-    recorded = entry.get("spark_schema")
+def _recorded_schema_reader(spark, recorded: dict | None):
+    """``spark.read`` bound to a recorded schema (a StructType's
+    ``jsonValue``), so the read skips the footer job that schema inference
+    runs; plain ``spark.read`` (inference) when nothing was recorded."""
     if recorded is None:
         return spark.read
     from pyspark.sql import types as T
@@ -472,9 +476,13 @@ def materialized_table(spark, dump_root: str, table: str):
             csv_dialect=doc.get("config", {}).get("csv_dialect"))
     base = materialized_table(spark, doc["parent_manifest"], table)
     pk = inc["pk"]
-    delta = (spark.read.parquet(entry["path"]) if entry.get("path")
+    # the delta and deletes files are read with the schemas the dump
+    # recorded when it wrote them; older manifests infer them
+    delta = (_recorded_schema_reader(spark, inc.get("delta_schema"))
+             .parquet(entry["path"]) if entry.get("path")
              else base.limit(0))
-    gone = (spark.read.parquet(inc["delete_path"]).select(*pk)
+    gone = (_recorded_schema_reader(spark, inc.get("delete_schema"))
+            .parquet(inc["delete_path"]).select(*pk)
             if inc.get("delete_path") else delta.select(*pk).limit(0))
     return apply_delta(base, delta, gone, pk)
 

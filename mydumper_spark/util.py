@@ -270,3 +270,19 @@ def thread_map(fn: Callable, items, n_threads: int) -> list:
 
     with ThreadPoolExecutor(max_workers=n) as ex:
         return list(ex.map(fn, items))
+
+
+def empty_frame(spark, schema: "T.StructType | str") -> DataFrame:
+    """A zero-row DataFrame of ``schema`` (a StructType or a DDL string,
+    as ``createDataFrame`` takes), planned as a JVM ``LocalRelation``
+    (``LocalTableScan <empty>``), nullability included.
+    ``spark.createDataFrame([], schema)`` is a Python RDD instead
+    (``Scan ExistingRDD``): its first action starts the Python worker
+    daemon to produce no rows."""
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    jspark = spark._jsparkSession
+    return DataFrame(
+        jspark.createDataFrame(spark._jvm.java.util.ArrayList(),
+                               jspark.parseDataType(schema.json())),
+        spark)

@@ -18,6 +18,21 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _python_rdd_scans(df) -> list[str]:
+    """Lineages of the plan's ``Scan ExistingRDD`` nodes that read a
+    Python-side RDD (``createDataFrame`` of local rows: a ``PythonRDD`` in
+    the lineage). ``localCheckpoint`` plans the same node over a JVM-side
+    RDD, which starts no Python worker."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    leaves = plan.collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    return [lineage for lineage in (
+        s.rdd().toDebugString() for s in scans
+        if s.nodeName() == "Scan ExistingRDD") if "PythonRDD" in lineage]
+
+
 def _optimized(df) -> str:
     return df._jdf.queryExecution().toString()
 
@@ -71,8 +86,8 @@ def test_checksum_partial_agg_jvm_side(spark):
     plan = _plan(df)
     assert "partial_bit_xor" in plan  # map-side combine before the exchange
     # only the 1-long agg state crosses the final exchange; the fixture's
-    # 1-row-group file also gets the parallelism-floor roundrobin spread
-    # (a no-op exchange on any well-split production source)
+    # 1-row-group file also gets the parallelism-floor xxhash64 hash
+    # spread (a no-op exchange on any well-split production source)
     assert "Exchange SinglePartition" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -244,10 +259,15 @@ def test_no_cartesian_or_nested_loop_anywhere(spark):
     """Registry-wide plan hygiene: no query may plan a CartesianProduct,
     and BroadcastNestedLoopJoin only where a documented scalar/baseline
     pattern requires it. A new query that accidentally cross-joins two
-    data-sized inputs fails here before it ever ships."""
+    data-sized inputs fails here before it ever ships. No query may scan
+    a Python-side ``createDataFrame`` either: its first run starts the
+    pyspark worker daemon."""
     for name, fn in entry.queries().items():
-        plan = _plan(fn(spark, SF))
+        df = fn(spark, SF)
+        plan = _plan(df)
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian:\n{plan}"
+        assert not _python_rdd_scans(df), (
+            f"{name} scans a Python-side createDataFrame:\n{plan}")
         if name not in _BNLJ_ALLOWED:
             assert "BroadcastNestedLoopJoin" not in plan, (
                 f"{name} plans a nested-loop join (add to _BNLJ_ALLOWED only "
